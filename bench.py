@@ -3,16 +3,22 @@
 
 Runs every declared query at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+JSON line of suite-level keys only, plus ``queries_file``, the file that
+holds the per-query map::
 
-    {"metric": "suite_wall_s", "value": N, "unit": "sec",
-     "queries": {"q01_wordcount": sec, ...}, "sf": 0.1}
+    {"metric": "suite_wall_s", "value": N, "unit": "sec", "sf": 0.1,
+     ..., "n_queries": 277, "n_errored": 0,
+     "queries_file": "BENCH_LAST.json"}
 
-Per-query timing is median of ``--runs`` (default 3) warm executions of
-``builder(spark, sf_dir)`` followed by a count-collapsing action
-(``df.count()`` for unordered bags; ``collect()`` for top-k results so
-the limit actually executes). A first untimed warm-up run per query
-absorbs JVM/codegen warm-up, matching BASELINE.md's "warm runs" protocol.
+Per-query timing is the median of ``--runs`` (default 3) warm executions
+of ``builder(spark, sf_dir)`` followed by a write to the ``noop`` sink,
+which evaluates every output column without collecting to the driver.
+A first untimed warm-up run per query absorbs JVM/codegen warm-up,
+matching BASELINE.md's "warm runs" protocol.
+
+Every run writes its full payload, with the session memo's hit and miss
+counts, to ``BENCH_LAST.json`` and to ``BENCH_LAST_c{cpus}.json`` beside
+it, so a run at one core count keeps the map of another.
 
 Usage: python bench.py [--runs N] [--sf-dir DIR] [query ...]
 """
@@ -31,6 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from multi_threaded_mapreduce_framework_spark.queries import all_queries
 from multi_threaded_mapreduce_framework_spark.session import get_spark
+from multi_threaded_mapreduce_framework_spark.sources.memo import memo_stats
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -218,6 +225,15 @@ def stdout_line(payload: dict, queries_file: str) -> str:
     return line
 
 
+def write_last_run(directory: str, last: dict, cpus: int) -> None:
+    """Write this run's payload to ``LAST_RUN_FILE`` and to its per-core
+    twin ``BENCH_LAST_c{cpus}.json`` in ``directory``: the shared file is
+    the newest run, the twin survives runs at other core counts."""
+    for name in (LAST_RUN_FILE, f"BENCH_LAST_c{cpus}.json"):
+        with open(os.path.join(directory, name), "w") as f:
+            json.dump(last, f, indent=1)
+
+
 def bless_record(payload: dict, path: str) -> bool:
     """Write ``payload`` into the committed-record slot ``path`` ONLY if
     its own probe track is clean (VERDICT r10 item 3: a dirty run must
@@ -362,11 +378,10 @@ def main() -> None:
     # 2: the stdout line must not be the only carrier of per-query
     # data).  A filtered run is flagged so nobody mistakes its partial
     # map for a suite record.
-    last = dict(payload)
+    last = dict(payload, memo=memo_stats(spark))
     if args.names:
         last["names_filter"] = sorted(args.names)
-    with open(os.path.join(here, LAST_RUN_FILE), "w") as f:
-        json.dump(last, f, indent=1)
+    write_last_run(here, last, spark.sparkContext.defaultParallelism)
     # Full-precision committed record for BASELINE.md round-over-round
     # diffs (full-suite runs only — a name-filtered run must not clobber
     # the last complete record; a CONTAMINATED run must not clobber the

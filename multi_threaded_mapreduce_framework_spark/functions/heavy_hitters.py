@@ -72,7 +72,8 @@ def bigram_mg_candidates(docs: DataFrame, text_col: str, k: int) -> DataFrame:
 
         counters: dict = {}
         for pdf in batches:
-            toks = pdf[text_col].str.split(" ")
+            # null text has no tokens, as in the explode form
+            toks = pdf[text_col].dropna().str.split(" ")
             lens = toks.map(len).to_numpy()
             flat = np.concatenate(
                 [np.asarray(t, dtype=object) for t in toks]

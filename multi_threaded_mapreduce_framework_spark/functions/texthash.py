@@ -106,7 +106,7 @@ def word_shingle_hashes_np(text: Column | str, n: int = 3) -> Column:
 
         out = []
         for t in texts:
-            words = t.split(" ")
+            words = [] if t is None else t.split(" ")
             nw = len(words)
             if nw < n:
                 out.append(np.empty(0, dtype=np.int64))

@@ -27,6 +27,10 @@ from multi_threaded_mapreduce_framework_spark.sources import (
     load_table,
     spread_small_scan,
 )
+from multi_threaded_mapreduce_framework_spark.sources.memo import (
+    listing_fingerprint,
+    materialize,
+)
 
 
 # Fan-out law for chained Python pipelines (r12 sweep, SCALE.md): each
@@ -36,11 +40,23 @@ from multi_threaded_mapreduce_framework_spark.sources import (
 # rows/task), and a 20x fixture moved the optimum to cores/2
 # (100k / 16 = 6250).  ~600 rows/task reproduces both optima within
 # ~6%.  The row count comes from ONE parquet-metadata count per
-# (session, plan) — memoized so the suite pays it once per table, and
-# irrelevant on production inputs where the scan already has enough
-# splits to no-op the spread entirely.
+# (session, plan, input listing) — memoized so the suite pays it once
+# per table, and irrelevant on production inputs where the scan
+# already has enough splits to no-op the spread entirely.
 _SPREAD_ROWS_PER_TASK = 600
-_ROWCOUNT_MEMO: dict = {}
+
+
+def _row_count(df) -> int:
+    """``df.count()`` memoized in the session memo, keyed on the plan and
+    the listing of its input files, so a rewritten input is recounted;
+    inputs the memo cannot fingerprint are counted every time."""
+    listing = listing_fingerprint(df.inputFiles())
+    if listing is None:
+        return df.count()
+    # parquet-footer count: one tiny metadata job
+    return materialize(
+        df.sparkSession, ("row_count", df.semanticHash(), listing), df.count
+    )
 
 
 def _spread_chain(df):
@@ -48,18 +64,8 @@ def _spread_chain(df):
     clamp(rows / ~600, 2, cores) partitions (see the fan-out law
     above); no-op once the scan already has that many splits, so
     production inputs are untouched."""
-    from multi_threaded_mapreduce_framework_spark.sources import (
-        spread_small_scan,
-    )
-
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    key = (spark.sparkContext.applicationId, df.semanticHash())
-    rows = _ROWCOUNT_MEMO.get(key)
-    if rows is None:
-        rows = df.count()  # parquet-footer count: one tiny metadata job
-        _ROWCOUNT_MEMO[key] = rows
-    n = min(cores, max(2, -(-rows // _SPREAD_ROWS_PER_TASK)))
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    n = min(cores, max(2, -(-_row_count(df) // _SPREAD_ROWS_PER_TASK)))
     return spread_small_scan(df, target=n)
 
 

@@ -14,6 +14,23 @@ layouts the driver has generated across rounds:
 - TIMESTAMP(MICROS, isAdjustedToUTC=false): reads as TIMESTAMP_NTZ;
   cast to TIMESTAMP under the engine's pinned UTC session timezone, an
   exact mapping that matches DuckDB's naive read.
+
+Schema memo: ``load_table`` memoizes each table's INFERRED SCHEMA for
+the session (``sources/memo.py::materialize``), never the DataFrame.
+Every call still returns a fresh relation, ``spark.read.schema(known)
+.parquet(path)`` on a hit, so two loads of one table carry disjoint
+attribute ids and self-joins (q86's two ``nation`` scans) stay
+unambiguous; a shared DataFrame would break exactly those.  What a hit
+skips is schema inference, the one Spark job per call that reads
+Parquet footers.  The key is the application (the memo is per
+``applicationId``), the absolute path, the listing fingerprint
+``(name, size, mtime_ns)`` of the file or of every file under a
+directory table, and the session's Parquet inference confs
+(``_INFERENCE_CONFS``).  Rewriting the file or flipping one of those
+confs therefore re-infers.  A path ``os.stat`` cannot see (a non-local
+filesystem) is never memoized and always infers.  For ``events`` the
+memo holds the RAW inferred schema; the ``ts`` normalization below is
+applied to every returned relation, hit or miss.
 """
 
 from __future__ import annotations
@@ -22,6 +39,11 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from multi_threaded_mapreduce_framework_spark.sources.memo import (
+    listing_fingerprint,
+    materialize,
+)
 
 TABLES = (
     "region",
@@ -38,6 +60,15 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Session confs that change the schema Spark infers from Parquet footers
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -50,7 +81,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_parquet(spark, table_path(sf_dir, name))
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             # ns -> us truncation == DuckDB epoch_us(ts); session tz is UTC
@@ -61,7 +92,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # the cast is exact and matches DuckDB's naive read
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_parquet(spark, table_path(sf_dir, name))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A fresh Parquet relation over ``path``, inferring its schema only
+    when the session memo has none for this listing and these confs."""
+    listing = listing_fingerprint([path])
+    if listing is None:
+        return spark.read.parquet(path)
+    key = (
+        "parquet_schema",
+        os.path.abspath(path),
+        listing,
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    inferred: list[DataFrame] = []
+
+    def infer():
+        inferred.append(spark.read.parquet(path))
+        return inferred[0].schema
+
+    schema = materialize(spark, key, infer)
+    # a miss returns the inferring read itself rather than reading twice
+    return inferred[0] if inferred else spark.read.schema(schema).parquet(path)
 
 
 def spread_small_scan(

@@ -1,0 +1,130 @@
+"""Session-scoped memo for driver-side values derived from input files.
+
+``materialize(spark, key, build)`` returns the value stored under
+``key`` for the session's Spark application, calling ``build()`` only
+on a miss.  The memo is bounded (least recently used entries go first)
+and counts hits and misses, so a run can report how much work it saved.
+
+What belongs here is small, immutable metadata that is expensive to
+re-derive on the driver: an inferred Parquet schema, a row count that
+picks a fan-out.  Never a DataFrame and never a query result: a cached
+DataFrame would hand every caller the same attribute ids (two loads of
+one table then self-join ambiguously), and every timed run must still
+execute its query's full plan.
+
+The memo lives as long as the Spark application: a new
+``applicationId`` starts an empty memo with zeroed counts.  Keys that
+depend on files carry :func:`listing_fingerprint`, so rewriting an
+input invalidates them.
+"""
+
+from __future__ import annotations
+
+import os
+import stat
+import threading
+from collections import OrderedDict
+from urllib.parse import unquote, urlparse
+
+from pyspark.sql import SparkSession
+
+CAPACITY = 256
+
+
+class SessionMemo:
+    """Bounded LRU map for one Spark application, with hit/miss counts."""
+
+    def __init__(self, app_id: str, capacity: int = CAPACITY):
+        self.app_id = app_id
+        self.capacity = capacity
+        self.hits = 0
+        self.misses = 0
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get_or_build(self, key, build):
+        with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+                self.hits += 1
+                return self._entries[key]
+            self.misses += 1
+        # built outside the lock: a build may run a Spark job, and two
+        # racing misses on one key store equal values
+        value = build()
+        with self._lock:
+            self._entries[key] = value
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.capacity:
+                self._entries.popitem(last=False)
+        return value
+
+    def stats(self) -> dict:
+        with self._lock:
+            return {
+                "hits": self.hits,
+                "misses": self.misses,
+                "entries": len(self._entries),
+            }
+
+
+_current: SessionMemo | None = None
+_current_lock = threading.Lock()
+
+
+def _session_memo(spark: SparkSession) -> SessionMemo:
+    """The memo of ``spark``'s application (one live SparkContext per
+    process, so one memo; a new application replaces it)."""
+    global _current
+    app_id = spark.sparkContext.applicationId
+    with _current_lock:
+        if _current is None or _current.app_id != app_id:
+            _current = SessionMemo(app_id)
+        return _current
+
+
+def materialize(spark: SparkSession, key, build):
+    """``build()``'s value for ``key`` in this session, built at most once
+    while the entry stays in the memo.  ``key`` must be hashable and
+    name everything the value depends on."""
+    return _session_memo(spark).get_or_build(key, build)
+
+
+def memo_stats(spark: SparkSession) -> dict:
+    """Hit, miss and entry counts of the session's memo."""
+    return _session_memo(spark).stats()
+
+
+def _local_path(path: str) -> str | None:
+    url = urlparse(path)
+    if url.scheme == "":
+        return os.path.abspath(path)
+    if url.scheme == "file":
+        return unquote(url.path)
+    return None
+
+
+def listing_fingerprint(paths) -> tuple | None:
+    """``(name, size, mtime_ns)`` of each file in ``paths``, a directory
+    standing for every file beneath it.  None when any path is not on
+    the local filesystem or cannot be stat'ed: such inputs are never
+    memoized, since nothing here would notice them change."""
+    out = []
+    for path in paths:
+        local = _local_path(path)
+        if local is None:
+            return None
+        try:
+            st = os.stat(local)
+            if not stat.S_ISDIR(st.st_mode):
+                out.append((local, st.st_size, st.st_mtime_ns))
+                continue
+            for root, dirs, files in os.walk(local):
+                dirs.sort()
+                for name in sorted(files):
+                    full = os.path.join(root, name)
+                    fst = os.stat(full)
+                    out.append((full, fst.st_size, fst.st_mtime_ns))
+        except OSError:
+            return None
+    return tuple(out)

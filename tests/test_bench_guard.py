@@ -107,3 +107,14 @@ def test_bless_record_refuses_contaminated_payload(tmp_path):
     # beside it for adjudication
     assert json.load(open(path)) == clean
     assert json.load(open(path + ".dirty")) == dirty
+
+
+def test_last_run_keeps_one_file_per_core_count(tmp_path):
+    # a c8 run after a c32 run must not destroy the c32 map
+    c32 = {"value": 1284.4, "queries": {"q01_wordcount": 0.5}, "memo": {"hits": 9}}
+    c8 = {"value": 1125.7, "queries": {"q01_wordcount": 0.9}, "memo": {"hits": 7}}
+    bench.write_last_run(str(tmp_path), c32, 32)
+    bench.write_last_run(str(tmp_path), c8, 8)
+    assert json.load(open(tmp_path / "BENCH_LAST_c32.json")) == c32
+    assert json.load(open(tmp_path / "BENCH_LAST_c8.json")) == c8
+    assert json.load(open(tmp_path / bench.LAST_RUN_FILE)) == c8

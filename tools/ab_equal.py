@@ -23,7 +23,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def rows_key(df):
     cols = df.columns
-    rows = sorted(tuple(r[c] for c in cols) for r in df.collect())
+    rows = sorted(
+        (tuple(r[c] for c in cols) for r in df.collect()),
+        key=lambda t: tuple((v is None, v) for v in t),
+    )
     return cols, rows
 
 
