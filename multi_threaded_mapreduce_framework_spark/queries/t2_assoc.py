@@ -15,15 +15,7 @@ from pyspark.sql import Window
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.sources import layout_tag, load_table
-
-# q142 (top-k affinity) and q150 (triangle census) consume the SAME
-# co-purchase pair-count relation; the basket expansion that produces
-# it (lineitem scan -> per-order distinct array -> in-row pair
-# explode -> pair-count shuffle) is the dominant shared cost when both
-# run in one session (bench/driver do).  Materialize it once per
-# (SparkContext, fixture dir) — same discipline as
-# t2_cluster.minhash_pairs for the q35 pair graph.
-_PAIRCOUNT_CACHE: dict[tuple[str, str], "F.DataFrame"] = {}
+from multi_threaded_mapreduce_framework_spark.sources.memo import session_state
 
 
 def build_copurchase_pair_counts(spark, sf_dir: str):
@@ -53,13 +45,14 @@ def build_copurchase_pair_counts(spark, sf_dir: str):
 
 def copurchase_pair_counts(spark, sf_dir: str):
     """(p1, p2, cnt): co-purchased distinct part pairs per order with
-    their order counts, localCheckpoint-ed once per session context."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    counts = _PAIRCOUNT_CACHE.get(key)
-    if counts is None:
-        counts = build_copurchase_pair_counts(spark, sf_dir).localCheckpoint()
-        _PAIRCOUNT_CACHE[key] = counts
-    return counts
+    their order counts, localCheckpoint-ed once per session and fixture
+    and shared by q142 (top-k affinity) and q150 (triangle census)."""
+    return session_state(
+        spark,
+        sf_dir,
+        "copurchase_pairs",
+        lambda _base: build_copurchase_pair_counts(spark, sf_dir).localCheckpoint(),
+    )
 
 
 @register(

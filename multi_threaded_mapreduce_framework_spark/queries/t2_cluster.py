@@ -25,33 +25,26 @@ import pyspark.sql.functions as F
 from multi_threaded_mapreduce_framework_spark.queries.registry import _REGISTRY, register
 from multi_threaded_mapreduce_framework_spark.queries.t2_dedup import q35_minhash_lsh
 from multi_threaded_mapreduce_framework_spark.sources import load_table
+from multi_threaded_mapreduce_framework_spark.sources.memo import session_state
 
 # The q35 oracle SELECT (d1, d2, jaccard) — reused verbatim so the
 # cluster oracle runs the identical pair-detection algorithm.
 _PAIR_SQL = _REGISTRY["q35_minhash_lsh"].oracle
 
-# q94/q95/q102/q118 all consume the SAME q35 pair set; rebuilding the
-# full sketch (shingle -> minhash -> band join -> verify) once per
-# query is the dominant shared cost when the family runs in one
-# session (the bench/driver do exactly that).  Cache the verified
-# (d1, d2) pairs localCheckpoint-ed once per (SparkContext, fixture
-# dir) — the checkpoint's blocks live in that context's block manager,
-# so the applicationId key can never resurrect a dead checkpoint.
-# This is the "materialize the dedup pair table once, then run the
-# cluster/select/rank passes against it" step every production
-# pipeline performs explicitly.
-_PAIR_CACHE: dict[tuple[str, str], "F.DataFrame"] = {}
-
 
 def minhash_pairs(spark, sf_dir: str):
-    """q35's verified near-dup (d1, d2) pair set, materialized once per
-    (session context, sf_dir) and shared by the graph-family queries."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pairs = _PAIR_CACHE.get(key)
-    if pairs is None:
-        pairs = q35_minhash_lsh(spark, sf_dir).select("d1", "d2").localCheckpoint()
-        _PAIR_CACHE[key] = pairs
-    return pairs
+    """q35's verified near-dup (d1, d2) pair set, localCheckpoint-ed once
+    per session and fixture and shared by the graph-family queries
+    (q94/q95/q102/q118): the "materialize the dedup pair table once,
+    then run the cluster/select/rank passes against it" step."""
+    return session_state(
+        spark,
+        sf_dir,
+        "minhash_pairs",
+        lambda _base: q35_minhash_lsh(spark, sf_dir)
+        .select("d1", "d2")
+        .localCheckpoint(),
+    )
 
 
 @register(

@@ -18,16 +18,13 @@ conventions as the rest of the registry (FIXTURES.md).
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
-from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-    _MATVIEW_STATE_CACHE,
-)
-from multi_threaded_mapreduce_framework_spark.sources import layout_tag
+from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import _converge
+from multi_threaded_mapreduce_framework_spark.sources.memo import session_state
 from multi_threaded_mapreduce_framework_spark.queries.t2_dedup import (
     COSINE_NEARDUP_THRESHOLD,
     IVF_CENTROIDS,
@@ -137,10 +134,6 @@ def q192_docgen_census(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ q266
-# (applicationId, sf_dir) -> census readback; the stream ran once
-_DGSTREAM_CACHE: dict = {}
-
-
 @register(
     "q266_pydatasource_stream_census",
     tier="T2",
@@ -197,9 +190,7 @@ def q266_pydatasource_stream_census(spark, sf_dir):
         register_python_sources,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dgstream")
-    cached = _DGSTREAM_CACHE.get(key)
-    if cached is None:
+    def build(base):
         register_python_sources(spark)
         stream = (
             spark.readStream.format("docgen")
@@ -228,20 +219,9 @@ def q266_pydatasource_stream_census(spark, sf_dir):
                 F.max("doc_id").cast("bigint").alias("max_doc"),
             )
         )
-        table = f"q266_dgstream_{abs(hash(key)) % 10**9}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _DGSTREAM_CACHE[key] = cached
-    return cached
+        return _converge(agg, base, "complete").localCheckpoint()
+
+    return session_state(spark, sf_dir, "dgstream", build)
 
 
 # ------------------------------------------------------------------ q193
@@ -628,15 +608,7 @@ def q196_stream_stream_join_readback(spark, sf_dir):
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ssjoin")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "ssjoin_readback",
-        )
+    def build(base):
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         joined = stream_stream_inner_join(
@@ -647,20 +619,9 @@ def q196_stream_stream_join_readback(spark, sf_dir):
             max_lag="1 hour",
             watermark="2 days",
         )
-        table = f"q196_ssj_{abs(hash(key)) % 10**9}"
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(joined, base, "append").localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "ssjoin_readback", build)
     lag = F.expr("unix_micros(r_ts) - unix_micros(l_ts)")
     return (
         cached.select(
@@ -785,16 +746,8 @@ def q268_jsonl_write_readback(spark, sf_dir):
         register_python_sources,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "jsonl_write")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build(base):
         register_python_sources(spark)
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "jsonl_write",
-        )
         out = os.path.join(base, "corpus")
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang", "source", "n_chars"
@@ -824,7 +777,7 @@ def q268_jsonl_write_readback(spark, sf_dir):
             .option("path", out)
             .load()
         )
-        cached = (
+        return (
             back.groupBy("lang", "source")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -835,8 +788,8 @@ def q268_jsonl_write_readback(spark, sf_dir):
             )
             .localCheckpoint()
         )
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+
+    return session_state(spark, sf_dir, "jsonl_write", build)
 
 
 # ------------------------------------------------------------------ q273
@@ -905,15 +858,7 @@ def q273_stream_left_join_readback(spark, sf_dir):
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ssljoin")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "ssljoin_readback",
-        )
+    def build(base):
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         joined = stream_stream_left_join(
@@ -945,7 +890,7 @@ def q273_stream_left_join_readback(spark, sf_dir):
             sdf.coalesce(1).write.mode("append").parquet(replay)
             bump_new_file_mtimes(replay, seen)
 
-        table = f"q273_ssl_{abs(hash(key)) % 10**9}"
+        table = os.path.basename(base)
         q = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -961,8 +906,9 @@ def q273_stream_left_join_readback(spark, sf_dir):
             q.processAllAvailable()
         finally:
             q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return spark.table(table).localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "ssljoin_readback", build)
     lag = F.expr(
         "CASE WHEN r_event IS NULL THEN NULL"
         " ELSE unix_micros(r_ts) - unix_micros(l_ts) END"
@@ -1046,15 +992,7 @@ def q274_stream_static_enrich_readback(spark, sf_dir):
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ssenrich")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "ssenrich_readback",
-        )
+    def build(base):
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         dim = (
@@ -1069,20 +1007,9 @@ def q274_stream_static_enrich_readback(spark, sf_dir):
             stream["user_id"] % 10 == dim["n_nationkey"],
             "left_outer",
         ).select("user_id", "event_id", "value", "n_name")
-        table = f"q274_sse_{abs(hash(key)) % 10**9}"
-        q = (
-            enriched.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(enriched, base, "append").localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "ssenrich_readback", build)
     micro = F.expr("CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
     return (
         cached.select(
@@ -1166,15 +1093,7 @@ def q275_stream_full_join_readback(spark, sf_dir):
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ssfjoin")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "ssfjoin_readback",
-        )
+    def build(base):
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         joined = stream_stream_full_join(
@@ -1204,7 +1123,7 @@ def q275_stream_full_join_readback(spark, sf_dir):
             sdf.coalesce(1).write.mode("append").parquet(replay)
             bump_new_file_mtimes(replay, seen)
 
-        table = f"q275_ssf_{abs(hash(key)) % 10**9}"
+        table = os.path.basename(base)
         q = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -1220,8 +1139,9 @@ def q275_stream_full_join_readback(spark, sf_dir):
             q.processAllAvailable()
         finally:
             q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return spark.table(table).localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "ssfjoin_readback", build)
     lag = F.expr(
         "CASE WHEN l_event IS NULL OR r_event IS NULL THEN NULL"
         " ELSE unix_micros(r_ts) - unix_micros(l_ts) END"
@@ -1314,15 +1234,7 @@ def q276_stream_semi_join_readback(spark, sf_dir):
         replay_events_time_ordered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "sssemi")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "sssemi_readback",
-        )
+    def build(base):
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
         joined = stream_stream_semi_join(
@@ -1333,20 +1245,9 @@ def q276_stream_semi_join_readback(spark, sf_dir):
             max_lag="1 hour",
             watermark="2 days",
         )
-        table = f"q276_sss_{abs(hash(key)) % 10**9}"
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(joined, base, "append").localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "sssemi_readback", build)
     return (
         cached.select(
             F.col("l_user").alias("user_id"),

@@ -39,18 +39,24 @@ rubric under the standard oracle conventions (FIXTURES.md).
 
 from __future__ import annotations
 
+import math
 import os
-import tempfile
+import urllib.parse
+from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
+from multi_threaded_mapreduce_framework_spark.operators.compact import (
+    _parquet_files,
+    compact_parquet_dir_rows,
+)
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.sources import (
-    layout_tag,
     load_table,
     spread_small_scan,
 )
+from multi_threaded_mapreduce_framework_spark.sources.memo import session_state
 
 # ------------------------------------------------------------------ q238
 _KANON_GRID = (2, 5, 10)
@@ -264,9 +270,6 @@ def q239_matryoshka_truncation(spark, sf_dir):
 _OPT_FILES_PER_PART = 8
 _OPT_SMALL_FILES = 32
 
-# (applicationId, sf_dir) -> census DataFrame; the rewrite ran once
-_OPT_CACHE: dict = {}
-
 
 @register(
     "q240_optimize_compaction_census",
@@ -309,58 +312,64 @@ def q240_optimize_compaction_census(spark, sf_dir):
     The builder raises loudly if the small-file layout has fewer
     files than the plan needs (cannot-compact-upward guard) rather
     than returning a census the oracle would rightly fail."""
-    import math as _math
-    import urllib.parse as _urlparse
-    from concurrent.futures import ThreadPoolExecutor
+    def build(base):
+        def one(d: str) -> tuple:
+            part_dir = os.path.join(base, d)
+            compact_partition(spark, part_dir)
+            return (partition_value(d), *partition_census(spark, part_dir))
 
-    from multi_threaded_mapreduce_framework_spark.operators.compact import (
-        _parquet_files,
-        compact_parquet_dir_rows,
-    )
+        rows_out = map_partitions(write_small_file_layout(spark, sf_dir, base), one)
+        return spark.createDataFrame(
+            rows_out, "event_type string, n_rows bigint, files_after bigint"
+        ).localCheckpoint()
 
-    key = (spark.sparkContext.applicationId, sf_dir, "optimize")
-    cached = _OPT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "mtmrf_layout",
-        layout_tag(spark, sf_dir),
-        "optimize_census",
-    )
+    return session_state(spark, sf_dir, "optimize_census", build)
+
+
+def write_small_file_layout(spark, sf_dir, base):
+    """Write q240's over-partitioned events layout (hive-partitioned by
+    event_type, up to ``_OPT_SMALL_FILES`` files per partition) under
+    ``base``; returns the partition directory names."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
     ev.repartition(_OPT_SMALL_FILES).write.mode("overwrite").partitionBy(
         "event_type"
     ).parquet(base)
+    return sorted(d for d in os.listdir(base) if d.startswith("event_type="))
 
-    def _optimize_one(d: str) -> tuple:
-        part_dir = os.path.join(base, d)
-        et = _urlparse.unquote(d.split("=", 1)[1])
-        n = spark.read.parquet(part_dir).count()
-        target = _math.ceil(n / _OPT_FILES_PER_PART)
-        planned = _math.ceil(n / target)
-        if len(_parquet_files(part_dir)) < planned:
-            raise RuntimeError(
-                f"small-file layout under {part_dir} has fewer files than "
-                f"the plan ({planned}) — cannot compact upward"
-            )
-        compact_parquet_dir_rows(spark, part_dir, target_rows=target)
-        n_after = spark.read.parquet(part_dir).count()
-        files_after = len(_parquet_files(part_dir))
-        return (et, int(n_after), int(files_after))
 
-    parts = sorted(
-        d for d in os.listdir(base) if d.startswith("event_type=")
-    )
+def partition_value(d: str) -> str:
+    """The unescaped value of a hive partition directory name."""
+    return urllib.parse.unquote(d.split("=", 1)[1])
+
+
+def compact_partition(spark, part_dir):
+    """Plan ``ceil(rows / _OPT_FILES_PER_PART)`` target rows for one
+    partition and compact it; raises when the layout has fewer files
+    than the plan (compaction cannot split files)."""
+    n = spark.read.parquet(part_dir).count()
+    target = math.ceil(n / _OPT_FILES_PER_PART)
+    planned = math.ceil(n / target)
+    if len(_parquet_files(part_dir)) < planned:
+        raise RuntimeError(
+            f"small-file layout under {part_dir} has fewer files than "
+            f"the plan ({planned}) — cannot compact upward"
+        )
+    compact_parquet_dir_rows(spark, part_dir, target_rows=target)
+
+
+def partition_census(spark, part_dir):
+    """(rows read back, files listed) of one partition directory."""
+    n_after = spark.read.parquet(part_dir).count()
+    return (int(n_after), len(_parquet_files(part_dir)))
+
+
+def map_partitions(parts, fn):
+    """``fn`` over every partition, run from a bounded thread pool so
+    the independent per-partition Spark jobs interleave."""
     with ThreadPoolExecutor(max_workers=min(8, max(1, len(parts)))) as pool:
-        rows_out = list(pool.map(_optimize_one, parts))
-    cached = spark.createDataFrame(
-        rows_out, "event_type string, n_rows bigint, files_after bigint"
-    ).localCheckpoint()
-    _OPT_CACHE[key] = cached
-    return cached
+        return list(pool.map(fn, parts))
 
 
 # ------------------------------------------------------------------ q241

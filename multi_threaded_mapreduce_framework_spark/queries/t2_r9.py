@@ -31,7 +31,6 @@ rubric under the standard oracle conventions (FIXTURES.md).
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
@@ -55,13 +54,17 @@ from multi_threaded_mapreduce_framework_spark.queries.t2_r8 import (
     _JT_CAP,
     _JT_GRID,
     _OPT_FILES_PER_PART,
-    _OPT_SMALL_FILES,
+    compact_partition,
+    map_partitions,
+    partition_census,
+    partition_value,
+    write_small_file_layout,
 )
 from multi_threaded_mapreduce_framework_spark.sources import (
-    layout_tag,
     load_table,
     spread_small_scan,
 )
+from multi_threaded_mapreduce_framework_spark.sources.memo import session_state
 
 
 # ------------------------------------------------------------------ q249
@@ -180,10 +183,6 @@ def q249_banded_threshold_curve(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ q250
-# (applicationId, sf_dir) -> census DataFrame; the rewrite+vacuum ran once
-_VAC_CACHE: dict = {}
-
-
 @register(
     "q250_vacuum_retention_census",
     tier="T2",
@@ -222,68 +221,35 @@ def q250_vacuum_retention_census(spark, sf_dir):
     survive — the in-flight-rewrite guard) are law-tested in
     tests/test_r9_queries.py rather than gated here, since mtime is
     wall-clock."""
-    import math as _math
-    import urllib.parse as _urlparse
-    from concurrent.futures import ThreadPoolExecutor
-
     from multi_threaded_mapreduce_framework_spark.operators.compact import (
-        _parquet_files,
-        compact_parquet_dir_rows,
         vacuum_swap_dirs,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "vacuum")
-    cached = _VAC_CACHE.get(key)
-    if cached is not None:
-        return cached
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "mtmrf_layout",
-        layout_tag(spark, sf_dir),
-        "vacuum_census",
-    )
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    ev.repartition(_OPT_SMALL_FILES).write.mode("overwrite").partitionBy(
-        "event_type"
-    ).parquet(base)
-
-    def _one(d: str) -> tuple:
-        part_dir = os.path.join(base, d)
-        et = _urlparse.unquote(d.split("=", 1)[1])
-        # plant the two orphan states a crashed swap leaves behind
-        for suffix in ("_compact-fakecrash", "_old-fakecrash"):
-            orphan = f"{part_dir}.{suffix}"
-            os.makedirs(orphan, exist_ok=True)
-            with open(os.path.join(orphan, "part-junk.parquet"), "wb") as f:
-                f.write(b"PAR1 half-written rewrite leftovers")
-        n = spark.read.parquet(part_dir).count()
-        target = _math.ceil(n / _OPT_FILES_PER_PART)
-        planned = _math.ceil(n / target)
-        if len(_parquet_files(part_dir)) < planned:
-            raise RuntimeError(
-                f"small-file layout under {part_dir} has fewer files than "
-                f"the plan ({planned}) — cannot compact upward"
+    def build(base):
+        def one(d: str) -> tuple:
+            part_dir = os.path.join(base, d)
+            # plant the two orphan states a crashed swap leaves behind
+            for suffix in ("_compact-fakecrash", "_old-fakecrash"):
+                orphan = f"{part_dir}.{suffix}"
+                os.makedirs(orphan, exist_ok=True)
+                with open(os.path.join(orphan, "part-junk.parquet"), "wb") as f:
+                    f.write(b"PAR1 half-written rewrite leftovers")
+            compact_partition(spark, part_dir)
+            removed = vacuum_swap_dirs(part_dir, min_age_s=0.0)
+            return (
+                partition_value(d),
+                *partition_census(spark, part_dir),
+                int(removed),
             )
-        compact_parquet_dir_rows(spark, part_dir, target_rows=target)
-        removed = vacuum_swap_dirs(part_dir, min_age_s=0.0)
-        n_after = spark.read.parquet(part_dir).count()
-        files_after = len(_parquet_files(part_dir))
-        return (et, int(n_after), int(files_after), int(removed))
 
-    parts = sorted(
-        d for d in os.listdir(base) if d.startswith("event_type=")
-    )
-    with ThreadPoolExecutor(max_workers=min(8, max(1, len(parts)))) as pool:
-        rows_out = list(pool.map(_one, parts))
-    cached = spark.createDataFrame(
-        rows_out,
-        "event_type string, n_rows bigint, files_after bigint,"
-        " orphans_removed bigint",
-    ).localCheckpoint()
-    _VAC_CACHE[key] = cached
-    return cached
+        rows_out = map_partitions(write_small_file_layout(spark, sf_dir, base), one)
+        return spark.createDataFrame(
+            rows_out,
+            "event_type string, n_rows bigint, files_after bigint,"
+            " orphans_removed bigint",
+        ).localCheckpoint()
+
+    return session_state(spark, sf_dir, "vacuum_census", build)
 
 
 # ------------------------------------------------------------------ q251

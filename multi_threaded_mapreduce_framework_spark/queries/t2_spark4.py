@@ -38,6 +38,7 @@ from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.queries.t2_cluster import _PJ_PARENT_SQL
 from multi_threaded_mapreduce_framework_spark.queries.t2_text import SESSION_GAP_US
 from multi_threaded_mapreduce_framework_spark.sources import load_table
+from multi_threaded_mapreduce_framework_spark.sources.memo import session_state
 
 
 # ------------------------------------------------------------------ q198
@@ -343,10 +344,6 @@ def q202_xml_roundtrip_census(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ q270
-# (applicationId, sf_dir) -> census readback; the shredded write ran once
-_SHRED_CACHE: dict = {}
-
-
 @register(
     "q270_variant_shredded_write_census",
     tier="T2",
@@ -393,21 +390,10 @@ def q270_variant_shredded_write_census(spark, sf_dir):
     bounded output domain, under q201's declared k >= 0 domain
     (Spark ``div`` truncates, DuckDB ``//`` floors — they agree only
     on nonnegative k; fixtures pin props.k to 0..99)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "variant_shred")
-    cached = _SHRED_CACHE.get(key)
-    if cached is None:
-        import os
-        import tempfile
+    import os
 
-        from multi_threaded_mapreduce_framework_spark.sources import layout_tag
-
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "variant_shred",
-            "events",
-        )
+    def build(base):
+        out = os.path.join(base, "events")
         ev = load_table(spark, sf_dir, "events").selectExpr(
             "event_id", "event_type", "parse_json(props) AS v"
         )
@@ -429,7 +415,7 @@ def q270_variant_shredded_write_census(spark, sf_dir):
                 else:
                     spark.conf.set(c, val)
         back = spark.read.parquet(out)
-        cached = (
+        return (
             back.select(
                 "event_id",
                 "event_type",
@@ -444,8 +430,8 @@ def q270_variant_shredded_write_census(spark, sf_dir):
             )
             .localCheckpoint()
         )
-        _SHRED_CACHE[key] = cached
-    return cached
+
+    return session_state(spark, sf_dir, "variant_shred", build)
 
 
 # ------------------------------------------------------------------ q272

@@ -18,16 +18,41 @@ verdict (item 7).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
-from multi_threaded_mapreduce_framework_spark.sources import layout_tag
+from multi_threaded_mapreduce_framework_spark.sources.memo import session_state
 
-# (applicationId, sf_dir) -> state_dir whose stream already ran this
-# session.  Same cache discipline as t2_cluster._PAIR_CACHE: the
-# application id key cannot resurrect state from a dead context, and a
-# re-run within one session reuses its own completed stream run.
-_MATVIEW_STATE_CACHE: dict = {}
+
+def _state_v2_session(spark):
+    """Ready ``spark`` for ``transformWithStateInPandas``: the protobuf
+    runtime on the workers (vanilla-session safe) and the RocksDB state
+    store."""
+    from multi_threaded_mapreduce_framework_spark.streaming.protoshim import (
+        ensure_protobuf_on_workers,
+    )
+
+    ensure_protobuf_on_workers(spark)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+
+
+def _converge(stream_df, base, output_mode):
+    """Run ``stream_df`` to convergence into a memory sink named after
+    the build directory ``base``, checkpointed under it; returns the
+    sink table."""
+    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+        run_to_convergence,
+    )
+
+    return run_to_convergence(
+        stream_df,
+        os.path.basename(base),
+        output_mode,
+        os.path.join(base, "ckpt"),
+    )
 
 
 @register(
@@ -72,25 +97,16 @@ def q186_bitmap_matview_readback(spark, sf_dir):
         start_bitmap_matview,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    state_dir = _MATVIEW_STATE_CACHE.get(key)
-    if state_dir is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "bitmap_matview",
-        )
+    def build(base):
         wire = os.path.join(base, "wire")
         state_dir = os.path.join(base, "state")
-        ckpt = os.path.join(base, "ckpt")
         write_kafka_replay(spark, sf_dir, wire, n_chunks=3)
         q = start_bitmap_matview(
             parse_events(kafka_wire_stream(spark, wire)),
             ["event_type"],
             "user_id",
             state_dir,
-            ckpt,
+            os.path.join(base, "ckpt"),
         )
         try:
             q.processAllAvailable()
@@ -100,7 +116,9 @@ def q186_bitmap_matview_readback(spark, sf_dir):
         # readback below exercises the compacted path; pre-compaction
         # multi-batch merge equality is pinned in tests/test_matview.py
         compact_bitmap_matview(spark, state_dir, ["event_type"])
-        _MATVIEW_STATE_CACHE[key] = state_dir
+        return state_dir
+
+    state_dir = session_state(spark, sf_dir, "bitmap_matview", build)
     return read_bitmap_matview(spark, state_dir, ["event_type"]).withColumnRenamed(
         "distinct_ids", "distinct_users"
     )
@@ -150,30 +168,23 @@ def q188_incremental_matview_readback(spark, sf_dir):
         start_incremental_matview,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "cnt_sum")
-    state_dir = _MATVIEW_STATE_CACHE.get(key)
-    if state_dir is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "cntsum_matview",
-        )
+    def build(base):
         wire = os.path.join(base, "wire")
         state_dir = os.path.join(base, "state")
-        ckpt = os.path.join(base, "ckpt")
         write_kafka_replay(spark, sf_dir, wire, n_chunks=3)
         q = start_incremental_matview(
             parse_events(kafka_wire_stream(spark, wire)),
             ["event_type"],
             state_dir,
-            ckpt,
+            os.path.join(base, "ckpt"),
         )
         try:
             q.processAllAvailable()
         finally:
             q.stop()
-        _MATVIEW_STATE_CACHE[key] = state_dir
+        return state_dir
+
+    state_dir = session_state(spark, sf_dir, "cntsum_matview", build)
     return read_matview(spark, state_dir, ["event_type"])
 
 
@@ -215,9 +226,6 @@ def q189_tws_state_readback(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
-    from multi_threaded_mapreduce_framework_spark.streaming.protoshim import (
-        ensure_protobuf_on_workers,
-    )
     from multi_threaded_mapreduce_framework_spark.streaming.stateful import (
         running_user_totals_tws_micro,
     )
@@ -225,41 +233,18 @@ def q189_tws_state_readback(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tws")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_readback",
-        )
+    def build(base):
+        _state_v2_session(spark)
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         stream = events_stream(spark, replay).select(
-            "user_id", F.expr(_MICRO_SQL.replace("value", "value")).alias("vm")
+            "user_id", F.expr(_MICRO_SQL).alias("vm")
         )
-        table = f"q189_tws_{abs(hash(key)) % 10**9}"
-        q = (
-            running_user_totals_tws_micro(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(
+            running_user_totals_tws_micro(stream), base, "update"
+        ).localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "tws_readback", build)
     return cached.groupBy("user_id").agg(
         F.max("cnt").cast("bigint").alias("cnt"),
         F.expr("max_by(sum_micro, cnt)").cast("bigint").alias("sum_micro"),
@@ -312,9 +297,6 @@ def q190_tws_timer_sessions(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
-    from multi_threaded_mapreduce_framework_spark.streaming.protoshim import (
-        ensure_protobuf_on_workers,
-    )
     from multi_threaded_mapreduce_framework_spark.streaming.stateful import (
         session_finalizer_tws,
     )
@@ -325,21 +307,9 @@ def q190_tws_timer_sessions(spark, sf_dir):
     )
 
     SENTINEL = 999_999_999
-    key = (spark.sparkContext.applicationId, sf_dir, "tws_timer")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_timer",
-        )
+
+    def build(base):
+        _state_v2_session(spark)
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
         ev = spark.read.parquet(replay)
@@ -362,21 +332,11 @@ def q190_tws_timer_sessions(spark, sf_dir):
         stream = events_stream(spark, replay).selectExpr(
             "user_id", "ts", "unix_micros(ts) AS us", "event_id"
         )
-        table = f"q190_tws_{abs(hash(key)) % 10**9}"
-        q = (
-            session_finalizer_tws(stream, gap_s=1800)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(
+            session_finalizer_tws(stream, gap_s=1800), base, "append"
+        ).localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "tws_timer", build)
     return cached.filter(F.col("user_id") != SENTINEL).select(
         "user_id", "start_us", "end_us", "n"
     )
@@ -431,9 +391,6 @@ def q231_tws_liststate_lastk(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
-    from multi_threaded_mapreduce_framework_spark.streaming.protoshim import (
-        ensure_protobuf_on_workers,
-    )
     from multi_threaded_mapreduce_framework_spark.streaming.stateful import (
         recent_values_tws,
     )
@@ -441,21 +398,8 @@ def q231_tws_liststate_lastk(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tws_list")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_list",
-        )
+    def build(base):
+        _state_v2_session(spark)
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         stream = events_stream(spark, replay).selectExpr(
@@ -464,21 +408,11 @@ def q231_tws_liststate_lastk(spark, sf_dir):
             "event_id",
             f"coalesce({_MICRO_SQL}, 0) AS vm",
         )
-        table = f"q231_tws_{abs(hash(key)) % 10**9}"
-        q = (
-            recent_values_tws(stream, k=3)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(
+            recent_values_tws(stream, k=3), base, "update"
+        ).localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "tws_list", build)
     return cached.groupBy("user_id", "pos").agg(
         F.expr("max_by(vm, seen)").cast("bigint").alias("vm")
     )
@@ -517,9 +451,6 @@ def q237_tws_mapstate_census(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
-    from multi_threaded_mapreduce_framework_spark.streaming.protoshim import (
-        ensure_protobuf_on_workers,
-    )
     from multi_threaded_mapreduce_framework_spark.streaming.stateful import (
         event_type_census_tws,
     )
@@ -527,39 +458,16 @@ def q237_tws_mapstate_census(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tws_map")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_map",
-        )
+    def build(base):
+        _state_v2_session(spark)
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         stream = events_stream(spark, replay).select("user_id", "event_type")
-        table = f"q237_tws_{abs(hash(key)) % 10**9}"
-        q = (
-            event_type_census_tws(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(
+            event_type_census_tws(stream), base, "update"
+        ).localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "tws_map", build)
     return cached.groupBy("user_id", "event_type").agg(
         F.max("cnt").cast("bigint").alias("cnt")
     )
@@ -604,30 +512,14 @@ def q242_tws_initial_state(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
-    from multi_threaded_mapreduce_framework_spark.streaming.protoshim import (
-        ensure_protobuf_on_workers,
-    )
     from multi_threaded_mapreduce_framework_spark.streaming.stateful import (
         bootstrapped_user_totals_tws,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tws_init")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build(base):
         from multi_threaded_mapreduce_framework_spark.sources import load_table
 
-        ensure_protobuf_on_workers(spark)  # vanilla-session safe
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "tws_init",
-        )
+        _state_v2_session(spark)
         ev = load_table(spark, sf_dir, "events")
         snapshot = (
             ev.filter(F.expr("event_id % 2 = 0"))
@@ -645,21 +537,13 @@ def q242_tws_initial_state(spark, sf_dir):
         stream = events_stream(spark, replay).select(
             "user_id", F.expr(_MICRO_SQL).alias("vm")
         )
-        table = f"q242_tws_{abs(hash(key)) % 10**9}"
-        q = (
-            bootstrapped_user_totals_tws(stream, snapshot.groupBy("user_id"))
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(
+            bootstrapped_user_totals_tws(stream, snapshot.groupBy("user_id")),
+            base,
+            "update",
+        ).localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "tws_init", build)
     return cached.groupBy("user_id").agg(
         F.max("cnt").cast("bigint").alias("cnt"),
         F.expr("max_by(sum_micro, cnt)").cast("bigint").alias("sum_micro"),
@@ -703,21 +587,13 @@ def q244_stream_dedup_readback(spark, sf_dir):
         stream_dedup,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dedup_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build(base):
         from multi_threaded_mapreduce_framework_spark.sources import load_table
         from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
             _data_files,
             bump_new_file_mtimes,
         )
 
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "dedup_readback",
-        )
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         pre_wave = set(_data_files(replay))
@@ -729,20 +605,9 @@ def q244_stream_dedup_readback(spark, sf_dir):
             events_stream(spark, replay).select("event_id", "event_type"),
             ["event_id"],
         )
-        table = f"q244_dedup_{abs(hash(key)) % 10**9}"
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(stream, base, "append").localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "dedup_readback", build)
     return cached.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -787,20 +652,12 @@ def q248_stream_dedup_watermark(spark, sf_dir):
         stream_dedup_within_watermark,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dedup_wm_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build(base):
         from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
             _data_files,
             bump_new_file_mtimes,
         )
 
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "dedup_wm_readback",
-        )
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
         pre_wave = set(_data_files(replay))
@@ -818,20 +675,9 @@ def q248_stream_dedup_watermark(spark, sf_dir):
             ["event_id"],
             watermark="3650 days",
         )
-        table = f"q248_dedup_wm_{abs(hash(key)) % 10**9}"
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+        return _converge(stream, base, "append").localCheckpoint()
+
+    cached = session_state(spark, sf_dir, "dedup_wm_readback", build)
     return cached.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -880,7 +726,7 @@ def q256_stream_window_census(spark, sf_dir):
 def _append_window_run(spark, sf_dir, tag, duration, slide):
     """Shared q256/q258 machinery: time-ordered replay + far-future
     sentinel + append-mode watermarked window aggregation (count +
-    integer-micro value sum), readback cached per (app, sf_dir, tag).
+    integer-micro value sum), readback held per session under ``tag``.
     Replay order (chunks, then sentinel last) is pinned with explicit
     ``os.utime`` mtimes, never wall-clock sleeps (r9 advisor fix)."""
     import pyspark.sql.functions as F
@@ -893,15 +739,8 @@ def _append_window_run(spark, sf_dir, tag, duration, slide):
     )
 
     SENTINEL = 999_999_999
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            tag,
-        )
+
+    def build(base):
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
         ev = spark.read.parquet(replay)
@@ -945,21 +784,9 @@ def _append_window_run(spark, sf_dir, tag, duration, slide):
                 "sum_micro",
             )
         )
-        table = f"{tag}_{abs(hash(key)) % 10**9}"
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+        return _converge(agg, base, "append").localCheckpoint()
+
+    return session_state(spark, sf_dir, tag, build)
 
 
 @register(
@@ -1040,23 +867,13 @@ def q262_stream_restart_readback(spark, sf_dir):
     from multi_threaded_mapreduce_framework_spark.sources import load_table
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
 
-    key = (spark.sparkContext.applicationId, sf_dir, "restart_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build(base):
         from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
             _data_files,
             bump_new_file_mtimes,
         )
 
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "restart_readback",
-        )
         replay = os.path.join(base, "replay")
-        ckpt = os.path.join(base, "ckpt")
-        table = f"q262_restart_{abs(hash(key)) % 10**9}"
         full = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "ts", "value"
         )
@@ -1073,26 +890,16 @@ def q262_stream_restart_readback(spark, sf_dir):
                     F.sum(F.expr(_MICRO_SQL)).cast("bigint").alias("sum_micro"),
                 )
             )
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(table)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            return _converge(agg, base, "complete")
 
         run_once()  # first half only, then a clean stop
         pre_downtime = set(_data_files(replay))
         second.repartition(2).write.mode("append").parquet(replay)
         bump_new_file_mtimes(replay, pre_downtime)  # downtime arrivals sort after
-        run_once()  # NEW query object, same checkpoint: resumes state
-        cached = spark.table(table).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+        # NEW query object, same checkpoint: resumes state
+        return run_once().localCheckpoint()
+
+    return session_state(spark, sf_dir, "restart_readback", build)
 
 
 @register(
@@ -1134,20 +941,12 @@ def q263_stream_file_sink_readback(spark, sf_dir):
         stream_dedup,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "file_sink_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
+    def build(base):
         from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
             _data_files,
             bump_new_file_mtimes,
         )
 
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "file_sink_readback",
-        )
         replay = os.path.join(base, "replay")
         ckpt = os.path.join(base, "ckpt")
         sink = os.path.join(base, "sink")
@@ -1179,14 +978,14 @@ def q263_stream_file_sink_readback(spark, sf_dir):
         ).repartition(3).write.mode("append").parquet(replay)
         bump_new_file_mtimes(replay, pre_wave)  # duplicate wave sorts after
         run_once()  # restart: recovered dedup state absorbs the wave
-        cached = (
+        return (
             spark.read.parquet(sink)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
             .localCheckpoint()
         )
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+
+    return session_state(spark, sf_dir, "file_sink_readback", build)
 
 
 @register(
@@ -1238,15 +1037,7 @@ def q264_stream_upsert_readback(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "upsert_readback")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "upsert_readback",
-        )
+    def build(base):
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=4)
         stream = events_stream(spark, replay).selectExpr(
@@ -1302,13 +1093,13 @@ def q264_stream_upsert_readback(spark, sf_dir):
         finally:
             q.stop()
         final = _state_versions()
-        cached = (
+        return (
             spark.read.parquet(os.path.join(base, f"state_v{max(final)}"))
             .select("user_id", F.col("vm").cast("bigint").alias("vm"))
             .localCheckpoint()
         )
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+
+    return session_state(spark, sf_dir, "upsert_readback", build)
 
 
 @register(
@@ -1351,15 +1142,7 @@ def q265_stream_update_changelog(spark, sf_dir):
         replay_events,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "update_changelog")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "update_changelog",
-        )
+    def build(base):
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=4)
         agg = (
@@ -1370,28 +1153,16 @@ def q265_stream_update_changelog(spark, sf_dir):
                 F.sum(F.expr(_MICRO_SQL)).cast("bigint").alias("sum_micro"),
             )
         )
-        table = f"q265_changelog_{abs(hash(key)) % 10**9}"
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        changelog = _converge(agg, base, "update")
         w = W.partitionBy("user_id").orderBy(F.desc("cnt"))
-        cached = (
-            spark.table(table)
-            .withColumn("rn", F.row_number().over(w))
+        return (
+            changelog.withColumn("rn", F.row_number().over(w))
             .filter("rn = 1")
             .select("user_id", "cnt", "sum_micro")
             .localCheckpoint()
         )
-        _MATVIEW_STATE_CACHE[key] = cached
-    return cached
+
+    return session_state(spark, sf_dir, "update_changelog", build)
 
 
 # ------------------------------------------------------------------ q269
@@ -1450,6 +1221,9 @@ def run_session_stream(spark, replay, ckpt, table):
     import pyspark.sql.functions as F
 
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
+    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+        run_to_convergence,
+    )
 
     gap = f"{SESSION_GAP_US // 1_000_000} seconds"
     per_session = (
@@ -1466,18 +1240,7 @@ def run_session_stream(spark, replay, ckpt, table):
             ).alias("dur_us"),
         )
     )
-    q = (
-        per_session.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(table)
+    return run_to_convergence(per_session, table, "append", ckpt)
 
 
 @register(
@@ -1516,22 +1279,14 @@ def q269_stream_session_census(spark, sf_dir):
     the streaming form's state is the live frontier only)."""
     import pyspark.sql.functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir, "session_census")
-    cached = _MATVIEW_STATE_CACHE.get(key)
-    if cached is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "mtmrf_layout",
-            layout_tag(spark, sf_dir),
-            "session_census",
-        )
+    def build(base):
         replay = os.path.join(base, "replay")
         build_session_replay(spark, sf_dir, replay)
-        table = f"q269_session_{abs(hash(key)) % 10**9}"
-        cached = run_session_stream(
-            spark, replay, os.path.join(base, "ckpt"), table
+        return run_session_stream(
+            spark, replay, os.path.join(base, "ckpt"), os.path.basename(base)
         ).localCheckpoint()
-        _MATVIEW_STATE_CACHE[key] = cached
+
+    cached = session_state(spark, sf_dir, "session_census", build)
     return cached.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
         F.sum("n_ev").cast("bigint").alias("n_events"),

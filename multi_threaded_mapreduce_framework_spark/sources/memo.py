@@ -5,23 +5,33 @@
 on a miss.  The memo is bounded (least recently used entries go first)
 and counts hits and misses, so a run can report how much work it saved.
 
-What belongs here is small, immutable metadata that is expensive to
-re-derive on the driver: an inferred Parquet schema, a row count that
-picks a fan-out.  Never a DataFrame and never a query result: a cached
-DataFrame would hand every caller the same attribute ids (two loads of
-one table then self-join ambiguously), and every timed run must still
-execute its query's full plan.
+What belongs here:
+
+- metadata that is expensive to re-derive on the driver: an inferred
+  Parquet schema, a row count that picks a fan-out;
+- session-materialized state built once per session: a state directory
+  a stream wrote, or a ``localCheckpoint()``-ed relation (a stream's
+  readback, a shared pair table).  Such a relation no longer reads its
+  inputs; its blocks live in this application's block manager.
+
+What never belongs here is a lazy relation that re-reads its inputs,
+such as ``load_table``'s result: a shared one would hand every caller
+the same attribute ids, so two loads of one table would self-join
+ambiguously.
 
 The memo lives as long as the Spark application: a new
 ``applicationId`` starts an empty memo with zeroed counts.  Keys that
 depend on files carry :func:`listing_fingerprint`, so rewriting an
-input invalidates them.
+input invalidates them.  :func:`session_state` is the keyed entry for
+state built from a fixture directory: every build gets a fresh
+directory, so no build reads files an earlier build left behind.
 """
 
 from __future__ import annotations
 
 import os
 import stat
+import tempfile
 import threading
 from collections import OrderedDict
 from urllib.parse import unquote, urlparse
@@ -88,6 +98,30 @@ def materialize(spark: SparkSession, key, build):
     while the entry stays in the memo.  ``key`` must be hashable and
     name everything the value depends on."""
     return _session_memo(spark).get_or_build(key, build)
+
+
+def session_state(spark: SparkSession, sf_dir: str, name: str, build):
+    """``build(base)``'s value, built at most once per session for the
+    fixture directory ``sf_dir`` as it is now.  ``base`` is a fresh,
+    empty directory under ``mtmrf_layout/<layout_tag>/`` for the build
+    to write into (replays, checkpoints, state); a rebuild after an
+    eviction or a rewritten input never sees an earlier build's files."""
+    from multi_threaded_mapreduce_framework_spark.sources.fixtures import layout_tag
+
+    def fresh():
+        parent = os.path.join(
+            tempfile.gettempdir(), "mtmrf_layout", layout_tag(spark, sf_dir)
+        )
+        os.makedirs(parent, exist_ok=True)
+        return build(tempfile.mkdtemp(prefix=f"{name}_", dir=parent))
+
+    key = (
+        "session_state",
+        name,
+        os.path.abspath(sf_dir),
+        listing_fingerprint([sf_dir]),
+    )
+    return materialize(spark, key, fresh)
 
 
 def memo_stats(spark: SparkSession) -> dict:

@@ -23,7 +23,6 @@ import time as _time
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from multi_threaded_mapreduce_framework_spark.sources import load_table
 
@@ -214,16 +213,21 @@ def stream_dedup_within_watermark(
 
 
 def run_to_convergence(
-    agg: DataFrame, name: str, output_mode: str = "complete"
-) -> StreamingQuery:
-    """Start a memory-sink query and process all available input; the
-    caller reads the converged result from ``spark.table(name)`` and
-    must ``stop()`` the returned query."""
-    q = (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    return q
+    agg: DataFrame,
+    name: str,
+    output_mode: str = "complete",
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """Run ``agg`` into a memory sink named ``name`` until it has
+    processed all available input, stop the query, and return the sink
+    table ``spark.table(name)``.  ``checkpoint``, when given, is the
+    query's checkpoint location."""
+    writer = agg.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return agg.sparkSession.table(name)

@@ -13,8 +13,27 @@ from multi_threaded_mapreduce_framework_spark.queries.t2_curate import (
     _WIN_W,
     winnow_fingerprints,
 )
+from multi_threaded_mapreduce_framework_spark.sources.memo import (
+    memo_stats,
+    session_state,
+)
 
 QUERIES = all_queries()
+
+
+def _must_not_run(base):
+    raise AssertionError(f"stream must not re-run (new build in {base})")
+
+
+def _held_state(spark, sf_dir, name):
+    """The session memo's entry for the stream state ``name``; fails
+    if the memo does not hold one."""
+    return session_state(spark, sf_dir, name, _must_not_run)
+
+
+def _assert_hits_only(before, after):
+    assert after["hits"] > before["hits"]
+    assert after["misses"] == before["misses"], "stream must not re-run"
 
 
 def _fps(spark, texts):
@@ -68,17 +87,13 @@ def test_q196_cache_and_lag_bounds(spark, sf_dir):
     the session cache — and every attributed pair respects the join's
     range bound: 0 <= min_lag_us and per-user lags sum within
     n_pairs * 1 hour."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
-
     build = QUERIES["q196_stream_stream_join_readback"].builder
     first = {tuple(r) for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "ssjoin")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    sentinel = _held_state(spark, sf_dir, "ssjoin_readback")
+    before = memo_stats(spark)
     second = {tuple(r) for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert _held_state(spark, sf_dir, "ssjoin_readback") is sentinel
+    _assert_hits_only(before, memo_stats(spark))
     assert first == second and first
     hour_us = 3_600 * 1_000_000
     for user_id, n_pairs, n_clicks, n_purchases, sum_lag, min_lag in first:
@@ -93,18 +108,15 @@ def test_q273_left_join_flushes_and_reconciles(spark, sf_dir):
     every click exactly once across matched+unmatched (n_clicks per
     user == that user's raw click count, and n_rows == n_matched +
     n_unmatched), and (d) respect the join's range bound on lags."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
     from multi_threaded_mapreduce_framework_spark.sources import load_table
 
     build = QUERIES["q273_stream_left_join_readback"].builder
     rows = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "ssljoin")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    sentinel = _held_state(spark, sf_dir, "ssljoin_readback")
+    before = memo_stats(spark)
     again = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert _held_state(spark, sf_dir, "ssljoin_readback") is sentinel
+    _assert_hits_only(before, memo_stats(spark))
     assert rows.keys() == again.keys() and rows
 
     clicks = {
@@ -135,18 +147,15 @@ def test_q274_stream_static_enrich_laws(spark, sf_dir):
     0-7 that user_id%10 hits, plus '<unmatched>' for the 8-9
     residues — the stateless null path really emitted), (c) conserve
     events and users against the raw fixture."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
     from multi_threaded_mapreduce_framework_spark.sources import load_table
 
     build = QUERIES["q274_stream_static_enrich_readback"].builder
     rows = {r.nation: r for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "ssenrich")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    sentinel = _held_state(spark, sf_dir, "ssenrich_readback")
+    before = memo_stats(spark)
     again = {r.nation: r for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert _held_state(spark, sf_dir, "ssenrich_readback") is sentinel
+    _assert_hits_only(before, memo_stats(spark))
     assert rows.keys() == again.keys() and rows
 
     ev = load_table(spark, sf_dir, "events")
@@ -193,18 +202,15 @@ def test_q275_full_join_reconciles_both_sides(spark, sf_dir):
     directions (some click-only and some purchase-only rows exist —
     otherwise the row degenerates to q273/q196), (e) respect the lag
     range bound."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
     from multi_threaded_mapreduce_framework_spark.sources import load_table
 
     build = QUERIES["q275_stream_full_join_readback"].builder
     rows = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "ssfjoin")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    sentinel = _held_state(spark, sf_dir, "ssfjoin_readback")
+    before = memo_stats(spark)
     again = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert _held_state(spark, sf_dir, "ssfjoin_readback") is sentinel
+    _assert_hits_only(before, memo_stats(spark))
     assert rows.keys() == again.keys() and rows
 
     ev = load_table(spark, sf_dir, "events")
@@ -244,17 +250,13 @@ def test_q276_semi_join_exactly_once_vs_q273(spark, sf_dir):
     converted == n_clicks - n_unmatched_clicks (the same replay, the
     same window law, two join modes), and the semi user set is exactly
     the users with at least one match."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
-
     build = QUERIES["q276_stream_semi_join_readback"].builder
     rows = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir, "sssemi")
-    assert key in _MATVIEW_STATE_CACHE
-    sentinel = _MATVIEW_STATE_CACHE[key]
+    sentinel = _held_state(spark, sf_dir, "sssemi_readback")
+    before = memo_stats(spark)
     again = {r.user_id: r for r in build(spark, sf_dir).collect()}
-    assert _MATVIEW_STATE_CACHE[key] is sentinel, "stream must not re-run"
+    assert _held_state(spark, sf_dir, "sssemi_readback") is sentinel
+    _assert_hits_only(before, memo_stats(spark))
     assert rows.keys() == again.keys() and rows
 
     left = {

@@ -14,16 +14,12 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 import numpy as np
 import pyspark.sql.functions as F
 
 from multi_threaded_mapreduce_framework_spark.queries import all_queries
-from multi_threaded_mapreduce_framework_spark.sources import (
-    layout_tag,
-    load_table,
-)
+from multi_threaded_mapreduce_framework_spark.sources import load_table
 
 QUERIES = {n: q.builder for n, q in all_queries().items()}
 
@@ -112,19 +108,13 @@ def test_q268_census_equals_batch(spark, sf_dir):
     assert got == batch
 
 
-def test_q268_manifest_invariants(spark, sf_dir):
+def test_q268_manifest_invariants(spark, sf_dir, build_dir):
     """After the overwrite+append write pair: the manifest names exactly
     the committed shard set (4 overwrite + 3 append tasks), every named
     shard exists, no stray visible shard or temp file survives, and the
     manifest row count equals the corpus size."""
     QUERIES["q268_jsonl_write_readback"](spark, sf_dir).collect()
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "mtmrf_layout",
-        layout_tag(spark, sf_dir),
-        "jsonl_write",
-        "corpus",
-    )
+    out = os.path.join(build_dir(sf_dir, "jsonl_write"), "corpus")
     with open(os.path.join(out, "_MANIFEST.json"), encoding="utf-8") as fh:
         manifest = json.load(fh)
     n_docs = load_table(spark, sf_dir, "documents").count()
@@ -197,7 +187,7 @@ def test_q270_census_equals_unshredded_expression_path(spark, sf_dir):
     assert got == batch and len(got) > 0
 
 
-def test_q270_files_are_physically_shredded(spark, sf_dir):
+def test_q270_files_are_physically_shredded(spark, sf_dir, build_dir):
     """Read the written parquet footer with parquet-java: the variant
     column must carry the SHREDDED structure (a ``typed_value`` group
     next to metadata/value) — the gate cannot silently pass on an
@@ -205,13 +195,7 @@ def test_q270_files_are_physically_shredded(spark, sf_dir):
     import glob
 
     QUERIES["q270_variant_shredded_write_census"](spark, sf_dir).collect()
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "mtmrf_layout",
-        layout_tag(spark, sf_dir),
-        "variant_shred",
-        "events",
-    )
+    out = os.path.join(build_dir(sf_dir, "variant_shred"), "events")
     files = glob.glob(os.path.join(out, "*.parquet"))
     assert files
     jvm = spark._jvm

@@ -20,8 +20,27 @@ from multi_threaded_mapreduce_framework_spark.queries.t2_r8 import (
     _OPT_FILES_PER_PART,
 )
 from multi_threaded_mapreduce_framework_spark.sources import load_table
+from multi_threaded_mapreduce_framework_spark.sources.memo import (
+    memo_stats,
+    session_state,
+)
 
 QUERIES = {n: q.builder for n, q in all_queries().items()}
+
+
+def _must_not_run(base):
+    raise AssertionError(f"stream must not re-run (new build in {base})")
+
+
+def _held_state(spark, sf_dir, name):
+    """The session memo's entry for the stream state ``name``; fails
+    if the memo does not hold one."""
+    return session_state(spark, sf_dir, name, _must_not_run)
+
+
+def _assert_hits_only(before, after):
+    assert after["hits"] > before["hits"]
+    assert after["misses"] == before["misses"], "stream must not re-run"
 
 
 def test_q237_mapstate_snapshots_bounded_and_converged(spark, sf_dir):
@@ -29,10 +48,6 @@ def test_q237_mapstate_snapshots_bounded_and_converged(spark, sf_dir):
     (user, type) cnt is <= the batch count, every count is positive,
     and the max over snapshots equals the batch count exactly (the
     monotone-readback law the query's max() relies on)."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
-
     out = {
         (r.user_id, r.event_type): r.cnt
         for r in QUERIES["q237_tws_mapstate_census"](spark, sf_dir).collect()
@@ -45,9 +60,9 @@ def test_q237_mapstate_snapshots_bounded_and_converged(spark, sf_dir):
         .collect()
     }
     assert out == batch
-    raw = _MATVIEW_STATE_CACHE[
-        (spark.sparkContext.applicationId, sf_dir, "tws_map")
-    ].collect()
+    before = memo_stats(spark)
+    raw = _held_state(spark, sf_dir, "tws_map").collect()
+    _assert_hits_only(before, memo_stats(spark))
     assert raw  # the stream really emitted snapshots
     seen_max: dict = {}
     for r in raw:
@@ -279,10 +294,6 @@ def test_q244_duplicate_absorption_law(spark, sf_dir):
     """The dedup readback equals the batch census over the
     UN-duplicated fixture; the raw deduped sink holds exactly one row
     per event_id even though every event was delivered twice."""
-    from multi_threaded_mapreduce_framework_spark.queries.t2_streamq import (
-        _MATVIEW_STATE_CACHE,
-    )
-
     out = {
         r.event_type: r.cnt
         for r in QUERIES["q244_stream_dedup_readback"](spark, sf_dir).collect()
@@ -295,9 +306,9 @@ def test_q244_duplicate_absorption_law(spark, sf_dir):
         .collect()
     }
     assert out == batch
-    raw = _MATVIEW_STATE_CACHE[
-        (spark.sparkContext.applicationId, sf_dir, "dedup_readback")
-    ]
+    before = memo_stats(spark)
+    raw = _held_state(spark, sf_dir, "dedup_readback")
+    _assert_hits_only(before, memo_stats(spark))
     n_events = sum(batch.values())
     assert raw.count() == n_events  # one survivor per event
     assert raw.select("event_id").distinct().count() == n_events

@@ -9,6 +9,7 @@ mixture's isqrt exactness law."""
 from __future__ import annotations
 
 import math
+import os
 
 import pyspark.sql.functions as F
 
@@ -505,17 +506,12 @@ def test_q262_restart_readback_equals_batch(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ q263
-def test_q263_file_sink_used_commit_log_and_matches_batch(spark, sf_dir):
+def test_q263_file_sink_used_commit_log_and_matches_batch(spark, sf_dir, build_dir):
     """The sink census equals the un-duplicated batch census AND the
     sink directory really is a streaming file sink (``_spark_metadata``
     commit log present) — i.e. the exactly-once guarantee came from
     the transaction log + recovered dedup state, not from a plain
     batch write."""
-    import os
-    import tempfile
-
-    from multi_threaded_mapreduce_framework_spark.sources import layout_tag
-
     got = {
         r.event_type: r.cnt
         for r in QUERIES["q263_stream_file_sink_readback"](spark, sf_dir).collect()
@@ -528,13 +524,7 @@ def test_q263_file_sink_used_commit_log_and_matches_batch(spark, sf_dir):
         .collect()
     }
     assert got == batch
-    sink = os.path.join(
-        tempfile.gettempdir(),
-        "mtmrf_layout",
-        layout_tag(spark, sf_dir),
-        "file_sink_readback",
-        "sink",
-    )
+    sink = os.path.join(build_dir(sf_dir, "file_sink_readback"), "sink")
     assert os.path.isdir(os.path.join(sink, "_spark_metadata"))
     # and the raw file set (commit log ignored) contains MORE rows than
     # the committed view iff any batch retried — at minimum it equals;
@@ -544,17 +534,14 @@ def test_q263_file_sink_used_commit_log_and_matches_batch(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ q264
-def test_q264_upsert_equals_batch_argmax_and_versioned_state(spark, sf_dir):
+def test_q264_upsert_equals_batch_argmax_and_versioned_state(
+    spark, sf_dir, build_dir
+):
     """The foreachBatch-merged table equals the batch last-write-wins
     argmax, and the batch_id-keyed state versions really exist (the
     idempotent-sink discipline: a replayed batch overwrites its own
     version instead of double-merging)."""
-    import os
-    import tempfile
-
     from pyspark.sql.window import Window as W
-
-    from multi_threaded_mapreduce_framework_spark.sources import layout_tag
 
     got = {
         r.user_id: r.vm
@@ -576,18 +563,13 @@ def test_q264_upsert_equals_batch_argmax_and_versioned_state(spark, sf_dir):
         .collect()
     )
     assert got == {r.user_id: r.vm for r in batch}
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "mtmrf_layout",
-        layout_tag(spark, sf_dir),
-        "upsert_readback",
-    )
+    base = build_dir(sf_dir, "upsert_readback")
     versions = [d for d in os.listdir(base) if d.startswith("state_v")]
     assert len(versions) >= 2, versions
 
 
 # ------------------------------------------------------------------ q265
-def test_q265_changelog_properties_and_batch_equality(spark, sf_dir):
+def test_q265_changelog_properties_and_batch_equality(spark, sf_dir, build_dir):
     """Update-mode changelog: final per-user state recovered from the
     change feed equals the batch census; the raw feed carries MORE
     rows than users (keys updated across multiple batches re-emit) and
@@ -611,8 +593,9 @@ def test_q265_changelog_properties_and_batch_equality(spark, sf_dir):
         .collect()
     )
     assert got == {r.user_id: (r.cnt, r.sum_micro) for r in batch}
-    key = (spark.sparkContext.applicationId, sf_dir, "update_changelog")
-    raw = spark.table(f"q265_changelog_{abs(hash(key)) % 10**9}").collect()
+    # the memory sink is named after its build directory
+    sink = os.path.basename(build_dir(sf_dir, "update_changelog"))
+    raw = spark.table(sink).collect()
     assert len(raw) > len(got)
     seen: dict[int, list[int]] = {}
     for r in raw:

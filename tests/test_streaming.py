@@ -28,51 +28,39 @@ def replay_dir(spark, tmp_path_factory):
 
 def test_tumbling_converges_to_batch_q24(spark, replay_dir):
     agg = tumbling_window_counts(events_stream(spark, replay_dir))
-    q = run_to_convergence(agg, "stream_q24")
-    try:
-        got = {tuple(r) for r in spark.table("stream_q24").collect()}
-        batch = {
-            tuple(r)
-            for r in all_queries()["q24_window_tumbling"].builder(spark, SF).collect()
-        }
-        assert got == batch
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "stream_q24")
+    got = {tuple(r) for r in res.collect()}
+    batch = {
+        tuple(r)
+        for r in all_queries()["q24_window_tumbling"].builder(spark, SF).collect()
+    }
+    assert got == batch
 
 
 def test_sliding_windows_cover_each_event_four_times(spark, replay_dir):
     agg = sliding_window_counts(events_stream(spark, replay_dir))
-    q = run_to_convergence(agg, "stream_sliding")
-    try:
-        total = (
-            spark.table("stream_sliding").agg(F.sum("cnt").alias("s")).collect()[0].s
-        )
-        n_events = spark.read.parquet(replay_dir).count()
-        assert total == 4 * n_events  # 1h window / 15min slide = 4 windows/event
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "stream_sliding")
+    total = res.agg(F.sum("cnt").alias("s")).collect()[0].s
+    n_events = spark.read.parquet(replay_dir).count()
+    assert total == 4 * n_events  # 1h window / 15min slide = 4 windows/event
 
 
 def test_session_window_converges_to_batch_q23(spark, replay_dir):
     # watermark off: the replay is hash-partitioned (not time-ordered),
     # and session-window state ops drop older-than-watermark input
     agg = session_counts(events_stream(spark, replay_dir), watermark=None)
-    q = run_to_convergence(agg, "stream_q23")
-    try:
-        got = {
-            (r.user_id, r.num_sessions)
-            for r in spark.table("stream_q23")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("num_sessions"))
-            .collect()
-        }
-        batch = {
-            (r.user_id, r.num_sessions)
-            for r in all_queries()["q23_sessionize"].builder(spark, SF).collect()
-        }
-        assert got == batch
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "stream_q23")
+    got = {
+        (r.user_id, r.num_sessions)
+        for r in res.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("num_sessions"))
+        .collect()
+    }
+    batch = {
+        (r.user_id, r.num_sessions)
+        for r in all_queries()["q23_sessionize"].builder(spark, SF).collect()
+    }
+    assert got == batch
 
 
 def test_stateful_running_totals_converges_to_batch_q04(spark, replay_dir):
@@ -81,41 +69,35 @@ def test_stateful_running_totals_converges_to_batch_q04(spark, replay_dir):
     )
 
     agg = running_user_totals(events_stream(spark, replay_dir))
-    q = run_to_convergence(agg, "stream_q04", output_mode="update")
-    try:
-        # update-mode memory sink appends one row per user per batch;
-        # the last (max-cnt) row per user is the converged total
-        rows = spark.table("stream_q04").collect()
-        latest = {}
-        for r in rows:
-            if r.user_id not in latest or r.cnt > latest[r.user_id].cnt:
-                latest[r.user_id] = r
-        batch = {
-            r.user_id: r
-            for r in all_queries()["q04_user_event_stats"].builder(spark, SF).collect()
-        }
-        assert set(latest) == set(batch)
-        for uid, r in latest.items():
-            assert r.cnt == batch[uid].cnt
-            # per-user float accumulation order differs batch-vs-stream
-            assert abs(r.sum_value - batch[uid].sum_value) < 0.05
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "stream_q04", output_mode="update")
+    # update-mode memory sink appends one row per user per batch;
+    # the last (max-cnt) row per user is the converged total
+    rows = res.collect()
+    latest = {}
+    for r in rows:
+        if r.user_id not in latest or r.cnt > latest[r.user_id].cnt:
+            latest[r.user_id] = r
+    batch = {
+        r.user_id: r
+        for r in all_queries()["q04_user_event_stats"].builder(spark, SF).collect()
+    }
+    assert set(latest) == set(batch)
+    for uid, r in latest.items():
+        assert r.cnt == batch[uid].cnt
+        # per-user float accumulation order differs batch-vs-stream
+        assert abs(r.sum_value - batch[uid].sum_value) < 0.05
 
 
 def test_stream_dedup_first_wins_across_batches(spark, replay_dir):
     from multi_threaded_mapreduce_framework_spark.streaming import stream_dedup
 
     s = stream_dedup(events_stream(spark, replay_dir), ["user_id", "event_type"])
-    q = run_to_convergence(s, "stream_dedup", output_mode="append")
-    try:
-        got = spark.table("stream_dedup")
-        batch = spark.read.parquet(replay_dir)
-        # one row per (user_id, event_type), exactly the distinct set
-        assert got.count() == batch.select("user_id", "event_type").distinct().count()
-        assert got.groupBy("user_id", "event_type").count().filter("count > 1").count() == 0
-    finally:
-        q.stop()
+    res = run_to_convergence(s, "stream_dedup", output_mode="append")
+    got = res
+    batch = spark.read.parquet(replay_dir)
+    # one row per (user_id, event_type), exactly the distinct set
+    assert got.count() == batch.select("user_id", "event_type").distinct().count()
+    assert got.groupBy("user_id", "event_type").count().filter("count > 1").count() == 0
 
 
 def test_checkpoint_recovery_no_duplicates(spark, tmp_path_factory):
@@ -173,23 +155,20 @@ def test_tws_running_totals_converges_to_batch_q04(spark, replay_dir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     agg = running_user_totals_tws(events_stream(spark, replay_dir))
-    q = run_to_convergence(agg, "stream_q04_tws", output_mode="update")
-    try:
-        rows = spark.table("stream_q04_tws").collect()
-        latest = {}
-        for r in rows:
-            if r.user_id not in latest or r.cnt > latest[r.user_id].cnt:
-                latest[r.user_id] = r
-        batch = {
-            r.user_id: r
-            for r in all_queries()["q04_user_event_stats"].builder(spark, SF).collect()
-        }
-        assert set(latest) == set(batch)
-        for uid, r in latest.items():
-            assert r.cnt == batch[uid].cnt
-            assert abs(r.sum_value - batch[uid].sum_value) < 0.05
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "stream_q04_tws", output_mode="update")
+    rows = res.collect()
+    latest = {}
+    for r in rows:
+        if r.user_id not in latest or r.cnt > latest[r.user_id].cnt:
+            latest[r.user_id] = r
+    batch = {
+        r.user_id: r
+        for r in all_queries()["q04_user_event_stats"].builder(spark, SF).collect()
+    }
+    assert set(latest) == set(batch)
+    for uid, r in latest.items():
+        assert r.cnt == batch[uid].cnt
+        assert abs(r.sum_value - batch[uid].sum_value) < 0.05
 
 
 def test_dedup_within_watermark_drops_redelivered_events(spark, replay_dir):
@@ -207,13 +186,10 @@ def test_dedup_within_watermark_drops_redelivered_events(spark, replay_dir):
     # 45 days >> the replay's disorder: no duplicate arrives after its
     # key's state was evicted, so the drop guarantee is total here
     s = stream_dedup_within_watermark(doubled, ["event_id"], watermark="45 days")
-    q = run_to_convergence(s.select("event_id"), "stream_dedup_wm", "append")
-    try:
-        got = spark.table("stream_dedup_wm").count()
-        distinct = spark.read.parquet(replay_dir).select("event_id").distinct().count()
-        assert got == distinct
-    finally:
-        q.stop()
+    res = run_to_convergence(s.select("event_id"), "stream_dedup_wm", "append")
+    got = spark.table("stream_dedup_wm").count()
+    distinct = spark.read.parquet(replay_dir).select("event_id").distinct().count()
+    assert got == distinct
 
 
 class _FakeValueState:
@@ -383,25 +359,21 @@ def test_tws_mapstate_census_converges_to_batch(spark, replay_dir):
     agg = event_type_census_tws(
         events_stream(spark, replay_dir).select("user_id", "event_type")
     )
-    q = run_to_convergence(agg, "stream_census_tws", output_mode="update")
-    try:
-        got = {
-            (r.user_id, r.event_type): r.cnt
-            for r in spark.table("stream_census_tws")
-            .groupBy("user_id", "event_type")
-            .agg(F.max("cnt").alias("cnt"))
-            .collect()
-        }
-        batch = {
-            (r.user_id, r.event_type): r.cnt
-            for r in spark.read.parquet(replay_dir)
-            .groupBy("user_id", "event_type")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        assert got == batch
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "stream_census_tws", output_mode="update")
+    got = {
+        (r.user_id, r.event_type): r.cnt
+        for r in res.groupBy("user_id", "event_type")
+        .agg(F.max("cnt").alias("cnt"))
+        .collect()
+    }
+    batch = {
+        (r.user_id, r.event_type): r.cnt
+        for r in spark.read.parquet(replay_dir)
+        .groupBy("user_id", "event_type")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    }
+    assert got == batch
 
 
 def test_tws_liststate_recent_values_converges(spark, replay_dir):
@@ -422,44 +394,41 @@ def test_tws_liststate_recent_values_converges(spark, replay_dir):
     stream = events_stream(spark, replay_dir).selectExpr(
         "user_id", "unix_micros(ts) AS us", "event_id", f"{micro} AS vm"
     )
-    q = run_to_convergence(
+    res = run_to_convergence(
         recent_values_tws(stream, k=3), "stream_recent_tws", output_mode="update"
     )
-    try:
-        rows = spark.table("stream_recent_tws").collect()
-        latest_seen = {}
-        for r in rows:
-            latest_seen[r.user_id] = max(latest_seen.get(r.user_id, 0), r.seen)
-        got = {}
-        for r in rows:
-            if r.seen == latest_seen[r.user_id]:
-                got.setdefault(r.user_id, {})[r.pos] = r.vm
-        ev = (
-            spark.read.parquet(replay_dir)
-            .selectExpr("user_id", "unix_micros(ts) AS us", "event_id", f"{micro} AS vm")
-            .collect()
+    rows = res.collect()
+    latest_seen = {}
+    for r in rows:
+        latest_seen[r.user_id] = max(latest_seen.get(r.user_id, 0), r.seen)
+    got = {}
+    for r in rows:
+        if r.seen == latest_seen[r.user_id]:
+            got.setdefault(r.user_id, {})[r.pos] = r.vm
+    ev = (
+        spark.read.parquet(replay_dir)
+        .selectExpr("user_id", "unix_micros(ts) AS us", "event_id", f"{micro} AS vm")
+        .collect()
+    )
+    want: dict = {}
+    for r in ev:
+        want.setdefault(r.user_id, []).append(
+            (r.us, r.event_id, r.vm if r.vm is not None else 0)
         )
-        want: dict = {}
-        for r in ev:
-            want.setdefault(r.user_id, []).append(
-                (r.us, r.event_id, r.vm if r.vm is not None else 0)
-            )
-        for uid, evs in want.items():
-            evs.sort(key=lambda t: (-t[0], -t[1]))
-            expect = {i: v for i, (_, _, v) in enumerate(evs[:3])}
-            assert got[uid] == expect, (uid, got[uid], expect)
-        assert set(got) == set(want)
-        # per-user event totals carried in the second state variable
-        batch_n = {
-            r.user_id: r.n
-            for r in spark.read.parquet(replay_dir)
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        assert latest_seen == batch_n
-    finally:
-        q.stop()
+    for uid, evs in want.items():
+        evs.sort(key=lambda t: (-t[0], -t[1]))
+        expect = {i: v for i, (_, _, v) in enumerate(evs[:3])}
+        assert got[uid] == expect, (uid, got[uid], expect)
+    assert set(got) == set(want)
+    # per-user event totals carried in the second state variable
+    batch_n = {
+        r.user_id: r.n
+        for r in spark.read.parquet(replay_dir)
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert latest_seen == batch_n
 
 
 def test_tws_event_time_timer_sessionization(spark, tmp_path_factory):

@@ -76,16 +76,13 @@ def test_streamed_wire_tumbling_matches_batch_q24(spark, wire_dir):
     from multi_threaded_mapreduce_framework_spark.streaming import run_to_convergence
 
     agg = tumbling_window_counts(parse_events(kafka_wire_stream(spark, wire_dir)))
-    q = run_to_convergence(agg, "stream_kafka_q24")
-    try:
-        got = {tuple(r) for r in spark.table("stream_kafka_q24").collect()}
-        batch = {
-            tuple(r)
-            for r in all_queries()["q24_window_tumbling"].builder(spark, SF).collect()
-        }
-        assert got == batch
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "stream_kafka_q24")
+    got = {tuple(r) for r in res.collect()}
+    batch = {
+        tuple(r)
+        for r in all_queries()["q24_window_tumbling"].builder(spark, SF).collect()
+    }
+    assert got == batch
 
 
 def test_real_kafka_gate_raises_cleanly(spark):

@@ -68,11 +68,8 @@ def _check(cond, detail=""):
 @scenario
 def tumbling_vs_batch_q24(spark, sf_dir, replay_dir, work):
     agg = tumbling_window_counts(events_stream(spark, replay_dir))
-    q = run_to_convergence(agg, "cs_q24")
-    try:
-        got = {tuple(r) for r in spark.table("cs_q24").collect()}
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "cs_q24")
+    got = {tuple(r) for r in res.collect()}
     batch = {
         tuple(r)
         for r in all_queries()["q24_window_tumbling"].builder(spark, sf_dir).collect()
@@ -84,12 +81,9 @@ def tumbling_vs_batch_q24(spark, sf_dir, replay_dir, work):
 @scenario
 def sliding_coverage_4x(spark, sf_dir, replay_dir, work):
     agg = sliding_window_counts(events_stream(spark, replay_dir))
-    q = run_to_convergence(agg, "cs_sliding")
-    try:
-        total = spark.table("cs_sliding").agg(F.sum("cnt").alias("s")).first().s
-        rows = spark.table("cs_sliding").count()
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "cs_sliding")
+    total = res.agg(F.sum("cnt").alias("s")).first().s
+    rows = res.count()
     n_events = spark.read.parquet(replay_dir).count()
     _check(total == 4 * n_events, f"total={total} != 4x{n_events}")
     return rows
@@ -99,17 +93,13 @@ def sliding_coverage_4x(spark, sf_dir, replay_dir, work):
 def session_vs_batch_q23(spark, sf_dir, replay_dir, work):
     # watermark off: the replay is hash-partitioned, not time-ordered
     agg = session_counts(events_stream(spark, replay_dir), watermark=None)
-    q = run_to_convergence(agg, "cs_q23")
-    try:
-        got = {
-            (r.user_id, r.num_sessions)
-            for r in spark.table("cs_q23")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("num_sessions"))
-            .collect()
-        }
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "cs_q23")
+    got = {
+        (r.user_id, r.num_sessions)
+        for r in res.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("num_sessions"))
+        .collect()
+    }
     batch = {
         (r.user_id, r.num_sessions)
         for r in all_queries()["q23_sessionize"].builder(spark, sf_dir).collect()
@@ -126,11 +116,8 @@ def stateful_totals_vs_batch_q04(spark, sf_dir, replay_dir, work):
     )
 
     agg = running_user_totals(events_stream(spark, replay_dir))
-    q = run_to_convergence(agg, "cs_q04", output_mode="update")
-    try:
-        rows = spark.table("cs_q04").collect()
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "cs_q04", output_mode="update")
+    rows = res.collect()
     latest = {}
     for r in rows:
         if r.user_id not in latest or r.cnt > latest[r.user_id].cnt:
@@ -159,11 +146,8 @@ def tws_totals_vs_batch_q04(spark, sf_dir, replay_dir, work):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     agg = running_user_totals_tws(events_stream(spark, replay_dir))
-    q = run_to_convergence(agg, "cs_q04_tws", output_mode="update")
-    try:
-        rows = spark.table("cs_q04_tws").collect()
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "cs_q04_tws", output_mode="update")
+    rows = res.collect()
     latest = {}
     for r in rows:
         if r.user_id not in latest or r.cnt > latest[r.user_id].cnt:
@@ -194,17 +178,13 @@ def tws_mapstate_census_vs_batch(spark, sf_dir, replay_dir, work):
     agg = event_type_census_tws(
         events_stream(spark, replay_dir).select("user_id", "event_type")
     )
-    q = run_to_convergence(agg, "cs_census_tws", output_mode="update")
-    try:
-        got = {
-            (r.user_id, r.event_type): r.cnt
-            for r in spark.table("cs_census_tws")
-            .groupBy("user_id", "event_type")
-            .agg(F.max("cnt").alias("cnt"))
-            .collect()
-        }
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "cs_census_tws", output_mode="update")
+    got = {
+        (r.user_id, r.event_type): r.cnt
+        for r in res.groupBy("user_id", "event_type")
+        .agg(F.max("cnt").alias("cnt"))
+        .collect()
+    }
     batch = {
         (r.user_id, r.event_type): r.cnt
         for r in spark.read.parquet(replay_dir)
@@ -233,13 +213,10 @@ def tws_liststate_recent_vs_batch(spark, sf_dir, replay_dir, work):
     stream = events_stream(spark, replay_dir).selectExpr(
         "user_id", "unix_micros(ts) AS us", "event_id", f"{micro} AS vm"
     )
-    q = run_to_convergence(
+    res = run_to_convergence(
         recent_values_tws(stream, k=3), "cs_recent_tws", output_mode="update"
     )
-    try:
-        rows = spark.table("cs_recent_tws").collect()
-    finally:
-        q.stop()
+    rows = res.collect()
     latest_seen = {}
     for r in rows:
         latest_seen[r.user_id] = max(latest_seen.get(r.user_id, 0), r.seen)
@@ -452,18 +429,15 @@ def tws_initial_state_bootstrap(spark, sf_dir, replay_dir, work):
     stream = events_stream(spark, odd_dir).selectExpr(
         "user_id", f"{micro} AS vm"
     )
-    q = run_to_convergence(
+    res = run_to_convergence(
         bootstrapped_user_totals_tws(stream, snapshot.groupBy("user_id")),
         "cs_bootstrap",
         output_mode="update",
     )
-    try:
-        latest = {}
-        for r in spark.table("cs_bootstrap").collect():
-            if r.user_id not in latest or r.cnt > latest[r.user_id][0]:
-                latest[r.user_id] = (r.cnt, r.sum_micro)
-    finally:
-        q.stop()
+    latest = {}
+    for r in spark.table("cs_bootstrap").collect():
+        if r.user_id not in latest or r.cnt > latest[r.user_id][0]:
+            latest[r.user_id] = (r.cnt, r.sum_micro)
     full = {
         r.user_id: (r.cnt, r.sm)
         for r in ev.selectExpr("user_id", "event_id", f"{micro} AS vm")
@@ -487,18 +461,14 @@ def tws_initial_state_bootstrap(spark, sf_dir, replay_dir, work):
 @scenario
 def dedup_first_wins(spark, sf_dir, replay_dir, work):
     s = stream_dedup(events_stream(spark, replay_dir), ["user_id", "event_type"])
-    q = run_to_convergence(s, "cs_dedup", output_mode="append")
-    try:
-        got_n = spark.table("cs_dedup").count()
-        dupes = (
-            spark.table("cs_dedup")
-            .groupBy("user_id", "event_type")
-            .count()
-            .filter("count > 1")
-            .count()
-        )
-    finally:
-        q.stop()
+    res = run_to_convergence(s, "cs_dedup", output_mode="append")
+    got_n = res.count()
+    dupes = (
+        res.groupBy("user_id", "event_type")
+        .count()
+        .filter("count > 1")
+        .count()
+    )
     want = spark.read.parquet(replay_dir).select("user_id", "event_type").distinct().count()
     _check(got_n == want and dupes == 0, f"got={got_n} want={want} dupes={dupes}")
     return got_n
@@ -530,11 +500,8 @@ def dedup_within_watermark_absorbs_and_evicts(spark, sf_dir, replay_dir, work):
     s = stream_dedup_within_watermark(
         events_stream(spark, d), ["event_id"], watermark="3650 days"
     )
-    q = run_to_convergence(s, "cs_ddww_a", output_mode="append")
-    try:
-        got = spark.table("cs_ddww_a").count()
-    finally:
-        q.stop()
+    res = run_to_convergence(s, "cs_ddww_a", output_mode="append")
+    got = res.count()
     _check(got == n, f"absorb: got={got} want={n}")
 
     # --- evict: 1s delay, three single-file micro-batches.
@@ -566,11 +533,8 @@ def dedup_within_watermark_absorbs_and_evicts(spark, sf_dir, replay_dir, work):
     s2 = stream_dedup_within_watermark(
         events_stream(spark, d2), ["event_id"], watermark="1 second"
     )
-    q2 = run_to_convergence(s2, "cs_ddww_e", output_mode="append")
-    try:
-        got2 = spark.table("cs_ddww_e").count()
-    finally:
-        q2.stop()
+    res2 = run_to_convergence(s2, "cs_ddww_e", output_mode="append")
+    got2 = res2.count()
     _check(
         got2 == n + n_late,
         f"evict: got={got2} want={n + n_late} (n={n} late={n_late})",
@@ -1019,11 +983,8 @@ def kafka_wire_tumbling_vs_batch_q24(spark, sf_dir, replay_dir, work):
     wire = os.path.join(work, "kw_wire")
     write_kafka_replay(spark, sf_dir, wire, n_chunks=3)
     agg = tumbling_window_counts(parse_events(kafka_wire_stream(spark, wire)))
-    q = run_to_convergence(agg, "cs_kw_q24")
-    try:
-        got = {tuple(r) for r in spark.table("cs_kw_q24").collect()}
-    finally:
-        q.stop()
+    res = run_to_convergence(agg, "cs_kw_q24")
+    got = {tuple(r) for r in res.collect()}
     batch = {
         tuple(r)
         for r in all_queries()["q24_window_tumbling"].builder(spark, sf_dir).collect()
