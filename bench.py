@@ -26,6 +26,7 @@ Usage: python bench.py [--runs N] [--sf-dir DIR] [query ...]
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import re
@@ -50,10 +51,34 @@ def sf_of(sf_dir: str) -> float:
         return -1.0
 
 
+def release_query_state(spark) -> None:
+    """Post-run hygiene, outside every timed region, once the caller has
+    dropped its last reference to the query's DataFrame.
+
+    Checkpoint-heavy builders (q35/q94/q98/...) leave localCheckpoint
+    RDD blocks in the block manager until the driver-side DataFrame
+    objects are GC'd and ContextCleaner runs; without this, whatever
+    queries FOLLOW them in declared order pay their memory pressure
+    (measured +0.3-0.7s on the TPC-H band after the round-4 rotation
+    reorder — isolation timings were unchanged).
+
+    The Python gc only drops the py4j proxies; the JVM-side RDD objects
+    that HOLD the checkpoint blocks are not enqueued for ContextCleaner
+    until a JVM GC runs, and on a 16g heap that can be many queries
+    later (q224 read 3.95 s in a suite record vs 1.45 s isolated on a
+    flat probe track; q232 3.58 vs 1.30).  The explicit JVM GC makes
+    each query's sample measure that query instead of its predecessors'
+    leaked blocks."""
+    gc.collect()
+    spark.catalog.clearCache()
+    try:
+        spark._jvm.System.gc()
+    except Exception:  # noqa: BLE001 - hygiene must never fail the bench
+        pass
+
+
 def time_query(spark, q, sf_dir: str, runs: int) -> float:
     """Median wall-clock of `runs` warm executions (1 untimed warm-up)."""
-    import gc
-
     samples = []
     for i in range(runs + 1):
         t0 = time.time()
@@ -72,30 +97,8 @@ def time_query(spark, q, sf_dir: str, runs: int) -> float:
         dt = time.time() - t0
         if i > 0:  # skip warm-up sample
             samples.append(dt)
-    # Cross-query hygiene: checkpoint-heavy builders (q35/q94/q98/...)
-    # leave localCheckpoint RDD blocks in the block manager until the
-    # driver-side DataFrame objects are GC'd and ContextCleaner runs;
-    # without this, whatever queries FOLLOW them in declared order pay
-    # their memory pressure (measured +0.3-0.7s on the TPC-H band after
-    # the round-4 rotation reorder — isolation timings were unchanged).
     del df
-    gc.collect()
-    spark.catalog.clearCache()
-    # Round 11 (measurement-hygiene fix, declared in OPTIMIZATION_r11.md):
-    # the Python gc above only drops the py4j proxies; the JVM-side RDD
-    # objects that HOLD the checkpoint blocks are not enqueued for
-    # ContextCleaner until a JVM GC runs, and on a 16g heap that can be
-    # many queries later — the documented suite-context inflation class
-    # (q224 read 3.95 s in the r10-close suite record vs 1.45 s isolated
-    # on a flat probe track; q232 3.58 vs 1.30).  An explicit JVM GC per
-    # query, OUTSIDE the timed region, makes each query's sample measure
-    # that query instead of its predecessors' leaked blocks.  The timed
-    # methodology (median of --runs warm noop-sink executions) is
-    # unchanged.
-    try:
-        spark._jvm.System.gc()
-    except Exception:  # noqa: BLE001 - hygiene must never fail the bench
-        pass
+    release_query_state(spark)
     return statistics.median(samples)
 
 

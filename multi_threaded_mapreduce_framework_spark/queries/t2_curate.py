@@ -555,6 +555,41 @@ def q195_winnowing_fingerprints(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ q196
+def _click_purchase_readback(spark, sf_dir, name, how):
+    """q196/q273/q275/q276's stream, held per session under ``name``: a
+    stream-stream ``how`` join of clicks to purchases within 1 hour
+    over a time-ordered replay with a 2-day watermark, drained to
+    convergence (``streaming/windowed.py``), sentinel rows dropped."""
+    from multi_threaded_mapreduce_framework_spark.streaming import (
+        drain_to_convergence,
+        events_stream,
+        stream_stream_join,
+    )
+    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+        replay_events_time_ordered,
+    )
+
+    def build(base):
+        replay = os.path.join(base, "replay")
+        replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
+        joined = stream_stream_join(
+            events_stream(spark, replay).filter(F.col("event_type") == "click"),
+            events_stream(spark, replay).filter(
+                F.col("event_type") == "purchase"
+            ),
+            how,
+            max_lag="1 hour",
+            watermark="2 days",
+        )
+        out = drain_to_convergence(
+            joined, replay, os.path.basename(base), os.path.join(base, "ckpt")
+        )
+        users = [F.col(c) for c in ("l_user", "r_user") if c in out.columns]
+        return out.filter(F.coalesce(*users) >= 0).localCheckpoint()
+
+    return session_state(spark, sf_dir, name, build)
+
+
 @register(
     "q196_stream_stream_join_readback",
     tier="T2",
@@ -590,8 +625,8 @@ def q196_stream_stream_join_readback(spark, sf_dir):
     stream-stream join DROPS older-than-watermark input on arrival, so
     replay order and watermark slack are a correctness pair, not a
     tuning knob (tests/test_streaming_joins.py pins the hash-replay/
-    wide-watermark variant).  Inner joins emit eagerly, so
-    processAllAvailable() converges without a drain sentinel.
+    wide-watermark variant).  Inner joins emit eagerly; the shared
+    readback drains anyway, which cannot change an inner join's rows.
 
     Scale shape: state is bounded by watermark + the 1-hour range
     bound — each side buffers only rows whose join window the opposite
@@ -600,28 +635,7 @@ def q196_stream_stream_join_readback(spark, sf_dir):
     TB/day event feed shards across executors; lag sums in integer
     micros keep the readback census bit-exact vs batch.
     """
-    from multi_threaded_mapreduce_framework_spark.streaming import (
-        events_stream,
-        stream_stream_inner_join,
-    )
-    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        replay_events_time_ordered,
-    )
-
-    def build(base):
-        replay = os.path.join(base, "replay")
-        replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
-        joined = stream_stream_inner_join(
-            events_stream(spark, replay).filter(F.col("event_type") == "click"),
-            events_stream(spark, replay).filter(
-                F.col("event_type") == "purchase"
-            ),
-            max_lag="1 hour",
-            watermark="2 days",
-        )
-        return _converge(joined, base, "append").localCheckpoint()
-
-    cached = session_state(spark, sf_dir, "ssjoin_readback", build)
+    cached = _click_purchase_readback(spark, sf_dir, "ssjoin_readback", "inner")
     lag = F.expr("unix_micros(r_ts) - unix_micros(l_ts)")
     return (
         cached.select(
@@ -828,16 +842,12 @@ def q273_stream_left_join_readback(spark, sf_dir):
     (``l_ts + max_lag``), THEN emit exactly one null-padded row.
 
     Drain contract: outer rows only flush when the watermark passes
-    their window, so converging a bounded replay needs the sentinel
-    drain (two far-future click+purchase generations appended through
-    the stamped-mtime replay path: the first advances the watermark
-    past every real event, the second triggers the batch in which the
-    expired left state emits) — the same flush a production backfill
+    their window, so converging a bounded replay needs the
+    two-generation sentinel drain (the replay law in
+    ``streaming/windowed.py``) — the same flush a production backfill
     performs; ``tools/check_streaming.py::
     ss_left_join_flushes_after_watermark`` pins the set-equality form,
-    this row pins the hash-gated census.  Sentinel rows carry negative
-    user_ids and are filtered before the census (the batch oracle
-    never sees them).
+    this row pins the hash-gated census.
 
     Scale shape: state is bounded by watermark + the 1-hour range
     bound on BOTH sides (hours of events, not history), hash-
@@ -846,76 +856,15 @@ def q273_stream_left_join_readback(spark, sf_dir):
     table costs no second scan of the click stream.  Lag sums in
     integer micros keep the census bit-exact vs batch.
     """
-    import datetime
-
-    from multi_threaded_mapreduce_framework_spark.streaming import (
-        events_stream,
-        stream_stream_left_join,
+    cached = _click_purchase_readback(
+        spark, sf_dir, "ssljoin_readback", "left_outer"
     )
-    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        _data_files,
-        bump_new_file_mtimes,
-        replay_events_time_ordered,
-    )
-
-    def build(base):
-        replay = os.path.join(base, "replay")
-        replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
-        joined = stream_stream_left_join(
-            events_stream(spark, replay).filter(F.col("event_type") == "click"),
-            events_stream(spark, replay).filter(
-                F.col("event_type") == "purchase"
-            ),
-            max_lag="1 hour",
-            watermark="2 days",
-        )
-
-        def write_sentinels(days_ahead: int) -> None:
-            # far-future click+purchase pair (negative user_ids), through
-            # the stamped-mtime path so the listing order stays pinned
-            t0 = datetime.datetime(2025, 1, 1) + datetime.timedelta(
-                days=days_ahead
-            )
-            rows = [
-                (-1, t0, -1, "click", 0.0, "{}"),
-                (-2, t0 + datetime.timedelta(hours=6), -2, "purchase", 0.0, "{}"),
-            ]
-            seen = set(_data_files(replay))
-            schema = spark.read.parquet(replay).schema
-            sdf = spark.createDataFrame(
-                rows,
-                "user_id bigint, ts timestamp, event_id bigint,"
-                " event_type string, value double, props string",
-            ).select(*schema.fieldNames())  # replay's column order
-            sdf.coalesce(1).write.mode("append").parquet(replay)
-            bump_new_file_mtimes(replay, seen)
-
-        table = os.path.basename(base)
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_sentinels(0)  # watermark past every real event
-            q.processAllAvailable()
-            write_sentinels(30)  # the batch in which expired state emits
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(table).localCheckpoint()
-
-    cached = session_state(spark, sf_dir, "ssljoin_readback", build)
     lag = F.expr(
         "CASE WHEN r_event IS NULL THEN NULL"
         " ELSE unix_micros(r_ts) - unix_micros(l_ts) END"
     )
     return (
-        cached.filter(F.col("l_user") >= 0)  # drop sentinel clicks
-        .select(
+        cached.select(
             F.col("l_user").alias("user_id"),
             "l_event",
             "r_event",
@@ -1065,13 +1014,9 @@ def q275_stream_full_join_readback(spark, sf_dir):
     click preceded — so the census additionally reconciles the
     purchase side (``n_purchase_only``), which q273 cannot see.
 
-    The two-generation sentinel drain is q273's verbatim (gen 1
-    advances both watermarks past every real event; gen 2 triggers the
-    batch in which the expired state on BOTH sides emits); sentinel
-    rows carry negative user_ids on both sides and are filtered before
-    the census, so the batch oracle never sees them.  The gate's
-    strength over the left form: a full join that loses an unmatched
-    RIGHT row (or emits it twice, or emits it before the left
+    The two-generation sentinel drain is q273's (here the expired state
+    on BOTH sides emits).  The gate's strength over the left form: a
+    full join that loses an unmatched RIGHT row (or emits it twice, or emits it before the left
     watermark proves no older click can arrive) breaks n_rows,
     n_purchase_only, or the distinct-purchase reconciliation.
 
@@ -1081,74 +1026,15 @@ def q275_stream_full_join_readback(spark, sf_dir):
     event accounted for exactly once: matched, click-only, or
     purchase-only — the three rows of a daily reconciliation report).
     """
-    import datetime
-
-    from multi_threaded_mapreduce_framework_spark.streaming import (
-        events_stream,
-        stream_stream_full_join,
+    cached = _click_purchase_readback(
+        spark, sf_dir, "ssfjoin_readback", "full_outer"
     )
-    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        _data_files,
-        bump_new_file_mtimes,
-        replay_events_time_ordered,
-    )
-
-    def build(base):
-        replay = os.path.join(base, "replay")
-        replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
-        joined = stream_stream_full_join(
-            events_stream(spark, replay).filter(F.col("event_type") == "click"),
-            events_stream(spark, replay).filter(
-                F.col("event_type") == "purchase"
-            ),
-            max_lag="1 hour",
-            watermark="2 days",
-        )
-
-        def write_sentinels(days_ahead: int) -> None:
-            t0 = datetime.datetime(2025, 1, 1) + datetime.timedelta(
-                days=days_ahead
-            )
-            rows = [
-                (-1, t0, -1, "click", 0.0, "{}"),
-                (-2, t0 + datetime.timedelta(hours=6), -2, "purchase", 0.0, "{}"),
-            ]
-            seen = set(_data_files(replay))
-            schema = spark.read.parquet(replay).schema
-            sdf = spark.createDataFrame(
-                rows,
-                "user_id bigint, ts timestamp, event_id bigint,"
-                " event_type string, value double, props string",
-            ).select(*schema.fieldNames())
-            sdf.coalesce(1).write.mode("append").parquet(replay)
-            bump_new_file_mtimes(replay, seen)
-
-        table = os.path.basename(base)
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_sentinels(0)
-            q.processAllAvailable()
-            write_sentinels(30)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(table).localCheckpoint()
-
-    cached = session_state(spark, sf_dir, "ssfjoin_readback", build)
     lag = F.expr(
         "CASE WHEN l_event IS NULL OR r_event IS NULL THEN NULL"
         " ELSE unix_micros(r_ts) - unix_micros(l_ts) END"
     )
     return (
-        cached.filter(F.coalesce(F.col("l_user"), F.col("r_user")) >= 0)
-        .select(
+        cached.select(
             F.coalesce(F.col("l_user"), F.col("r_user")).alias("user_id"),
             "l_event",
             "r_event",
@@ -1217,37 +1103,18 @@ def q276_stream_semi_join_readback(spark, sf_dir):
     purchase) pair, the semi join at most one row per click, which at
     100 TB/day is the difference between a feed sized by clicks and
     one sized by the hot users' N x M pair blow-up.  Emission is eager
-    (first match), so like the inner form the bounded replay converges
-    with no sentinel drain; unmatched click state is silently evicted
-    when the watermark clears its window — dropped, never emitted
-    (the DuckDB EXISTS oracle sees exactly the converted set).
+    (first match), like the inner form; unmatched click state is
+    silently evicted when the watermark clears its window — dropped,
+    never emitted (the DuckDB EXISTS oracle sees exactly the converted
+    set).
 
     Scale shape: q196's two-sided watermark + range-bound state
     discipline, hash-partitioned by user_id; integer-micro click
     timestamps make the census bit-exact vs batch.
     """
-    from multi_threaded_mapreduce_framework_spark.streaming import (
-        events_stream,
-        stream_stream_semi_join,
+    cached = _click_purchase_readback(
+        spark, sf_dir, "sssemi_readback", "left_semi"
     )
-    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        replay_events_time_ordered,
-    )
-
-    def build(base):
-        replay = os.path.join(base, "replay")
-        replay_events_time_ordered(spark, sf_dir, replay, n_chunks=3)
-        joined = stream_stream_semi_join(
-            events_stream(spark, replay).filter(F.col("event_type") == "click"),
-            events_stream(spark, replay).filter(
-                F.col("event_type") == "purchase"
-            ),
-            max_lag="1 hour",
-            watermark="2 days",
-        )
-        return _converge(joined, base, "append").localCheckpoint()
-
-    cached = session_state(spark, sf_dir, "sssemi_readback", build)
     return (
         cached.select(
             F.col("l_user").alias("user_id"),

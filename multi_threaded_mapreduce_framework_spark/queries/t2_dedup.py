@@ -40,7 +40,6 @@ from multi_threaded_mapreduce_framework_spark.functions.texthash import (
 from multi_threaded_mapreduce_framework_spark.functions.vector import cosine_similarity
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.sources import (
-    layout_tag,
     load_table,
     spread_small_scan,
 )
@@ -733,23 +732,20 @@ def q120_ann_partition_pruned(spark, sf_dir):
     difference between scanning 100 TB and ~6 TB per probe.
     ``tests/test_plan_quality.py::test_q120_dynamic_partition_pruning``
     pins the dynamic pruning node."""
-    import os
-    import tempfile
 
-    tag = layout_tag(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(), "mtmrf_layout", tag, "embeddings_by_bucket"
-    )
-    # session-unique tag: reuse this session's completed layout (same
-    # one-time-OPTIMIZE discipline as q112/q115/q137)
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
+    def build(base):
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
         emb.select("vec_id", "v", _bucket_col().alias("bucket")).write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(base)
-    part = spark.read.parquet(base)
+        return base
+
+    # written once per session and fixture (q112/q115/q137's discipline)
+    part = spark.read.parquet(
+        session_state(spark, sf_dir, "embeddings_by_bucket", build)
+    )
     probe = part.filter(F.col("vec_id") == 0).select(
         F.col("v").alias("pv"), F.col("bucket").alias("pb")
     )

@@ -490,7 +490,7 @@ FROM clicks c GROUP BY day
 def q105_funnel_conversion(spark, sf_dir):
     """Click -> purchase funnel: per click-day, how many clicks see a
     purchase by the same user within the following hour — the batch
-    twin of ``streaming.joins.stream_stream_inner_join`` (same keys,
+    twin of an inner ``streaming.joins.stream_stream_join`` (same keys,
     same range bound).
 
     Join-free plan: clicks and purchases stay in ONE per-user stream;

@@ -16,9 +16,6 @@ single-partition global window (q139), zero-shuffle in-row profiling
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
@@ -31,10 +28,10 @@ from multi_threaded_mapreduce_framework_spark.functions.heavy_hitters import (
 )
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.sources import (
-    layout_tag,
     load_table,
     spread_small_scan,
 )
+from multi_threaded_mapreduce_framework_spark.sources.memo import session_state
 
 # q135: support threshold 1/5000 of all shingle occurrences; the MG
 # sketch keeps MG_K counters per partition, guaranteeing recall for
@@ -184,58 +181,59 @@ def q137_zorder_skipping(spark, sf_dir):
     ``tests/test_scale_queries.py`` asserts per-file min/max spans are
     a small fraction of the global span on BOTH dimensions.  Values
     are layout-independent, so the oracle runs on the raw parquet."""
-    tag = layout_tag(spark, sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "mtmrf_layout", tag, "lineitem_zorder")
-    # same one-time-OPTIMIZE reuse discipline as q115: a completed
-    # layout under this session-unique tag is this session's own write
-    # of the same fixture — skip the rewrite, read it back
-    if os.path.exists(os.path.join(base, "_SUCCESS")):
-        return _zorder_read(spark, base)
-    # project the layout to the columns this table serves before the
-    # rewrite — a real OPTIMIZE rewrites whole rows, but the write is
-    # the dominant cost here and the skipping demonstration only needs
-    # the clustered keys + measures
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    # Normalize both keys to the full 16-bit range first (broadcast
-    # 1-row min/max): raw interleaving of unequal domains degenerates
-    # to a single-key sort, because the wider key's bits occupy all
-    # the high z positions — the same rank/scale step real OPTIMIZE
-    # ZORDER implementations apply.
-    rng = li.agg(
-        F.min("l_partkey").alias("pmin"),
-        F.max("l_partkey").alias("pmax"),
-        F.min("l_suppkey").alias("smin"),
-        F.max("l_suppkey").alias("smax"),
-    )
-    # Morton interleave by parallel bit-spread (x |= x<<8 &mask; <<4;
-    # <<2; <<1), staged through withColumn so codegen evaluates each
-    # step ONCE — ~3x cheaper per row than a 16-iteration aggregate()
-    # lambda, and the z column is computed twice (range-partition
-    # sampling + the real pass), doubling whatever it costs.
-    staged = (
-        li.join(F.broadcast(rng))
-        .withColumn(
-            "pn", F.expr("(l_partkey - pmin) * 65535 div greatest(pmax - pmin, 1)")
+
+    def build(base):
+        # project the layout to the columns this table serves before the
+        # rewrite — a real OPTIMIZE rewrites whole rows, but the write is
+        # the dominant cost here and the skipping demonstration only needs
+        # the clustered keys + measures
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
         )
-        .withColumn(
-            "sn", F.expr("(l_suppkey - smin) * 65535 div greatest(smax - smin, 1)")
+        # Normalize both keys to the full 16-bit range first (broadcast
+        # 1-row min/max): raw interleaving of unequal domains degenerates
+        # to a single-key sort, because the wider key's bits occupy all
+        # the high z positions — the same rank/scale step real OPTIMIZE
+        # ZORDER implementations apply.
+        rng = li.agg(
+            F.min("l_partkey").alias("pmin"),
+            F.max("l_partkey").alias("pmax"),
+            F.min("l_suppkey").alias("smin"),
+            F.max("l_suppkey").alias("smax"),
         )
+        # Morton interleave by parallel bit-spread (x |= x<<8 &mask; <<4;
+        # <<2; <<1), staged through withColumn so codegen evaluates each
+        # step ONCE — ~3x cheaper per row than a 16-iteration aggregate()
+        # lambda, and the z column is computed twice (range-partition
+        # sampling + the real pass), doubling whatever it costs.
+        staged = (
+            li.join(F.broadcast(rng))
+            .withColumn(
+                "pn", F.expr("(l_partkey - pmin) * 65535 div greatest(pmax - pmin, 1)")
+            )
+            .withColumn(
+                "sn", F.expr("(l_suppkey - smin) * 65535 div greatest(smax - smin, 1)")
+            )
+        )
+        for shift, mask in ((8, 16711935), (4, 252645135), (2, 858993459), (1, 1431655765)):
+            staged = staged.withColumn(
+                "pn", F.expr(f"(pn | shiftleft(pn, {shift})) & {mask}")
+            ).withColumn("sn", F.expr(f"(sn | shiftleft(sn, {shift})) & {mask}"))
+        (
+            staged.withColumn("z", F.expr("shiftleft(pn, 1) | sn"))
+            .repartitionByRange(8, "z")
+            .sortWithinPartitions("z")
+            .drop("z", "pn", "sn", "pmin", "pmax", "smin", "smax")
+            .write.mode("overwrite")
+            .parquet(base)
+        )
+        return base
+
+    # written once per session and fixture (q115's one-time-OPTIMIZE
+    # discipline)
+    return _zorder_read(
+        spark, session_state(spark, sf_dir, "lineitem_zorder", build)
     )
-    for shift, mask in ((8, 16711935), (4, 252645135), (2, 858993459), (1, 1431655765)):
-        staged = staged.withColumn(
-            "pn", F.expr(f"(pn | shiftleft(pn, {shift})) & {mask}")
-        ).withColumn("sn", F.expr(f"(sn | shiftleft(sn, {shift})) & {mask}"))
-    (
-        staged.withColumn("z", F.expr("shiftleft(pn, 1) | sn"))
-        .repartitionByRange(8, "z")
-        .sortWithinPartitions("z")
-        .drop("z", "pn", "sn", "pmin", "pmax", "smin", "smax")
-        .write.mode("overwrite")
-        .parquet(base)
-    )
-    return _zorder_read(spark, base)
 
 
 def _zorder_read(spark, base):

@@ -278,12 +278,13 @@ def q190_tws_timer_sessions(spark, sf_dir):
     fires, not when a batch window says so — hash-gated against the
     batch gaps-and-islands oracle.
 
-    Pipeline: time-ordered replay of the events fixture (chunk
-    boundaries = ts ntiles; the file stream orders by mtime) + one
-    far-future sentinel event whose arrival advances the watermark past
-    every real timer, so each real session is finalized and emitted
-    EXACTLY once (append mode).  Gaps visible within arrived data close
-    sessions inline; only each user's trailing session waits on its
+    Pipeline: time-ordered replay of the events fixture plus the
+    far-future event (the replay law in ``streaming/windowed.py``),
+    whose arrival advances the watermark past every real timer, so each
+    real session is finalized and emitted EXACTLY once (append mode);
+    the timer also emits the far-future user, which the readback drops.
+    Gaps visible within arrived data close sessions inline; only each
+    user's trailing session waits on its
     registered timer — RegisterTimer/DeleteTimer/ListTimers and the
     expiry callback all cross the state-server transport in this run.
 
@@ -301,34 +302,16 @@ def q190_tws_timer_sessions(spark, sf_dir):
         session_finalizer_tws,
     )
     from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        _data_files,
-        bump_new_file_mtimes,
+        FAR_FUTURE_USER,
+        append_far_future_event,
         replay_events_time_ordered,
     )
-
-    SENTINEL = 999_999_999
 
     def build(base):
         _state_v2_session(spark)
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
-        ev = spark.read.parquet(replay)
-        sent = (
-            ev.orderBy(F.desc("ts"))
-            .limit(1)
-            .selectExpr(
-                f"CAST({SENTINEL} AS BIGINT) AS event_id",
-                f"CAST({SENTINEL} AS BIGINT) AS user_id",
-                "'click' AS event_type",
-                "ts + INTERVAL 30 DAYS AS ts",
-                "CAST(0.0 AS DOUBLE) AS value",
-                "'{}' AS props",
-            )
-            .select(*ev.columns)
-        )
-        pre_sentinel = set(_data_files(replay))
-        sent.coalesce(1).write.mode("append").parquet(replay)
-        bump_new_file_mtimes(replay, pre_sentinel)  # sentinel replays last
+        append_far_future_event(spark, replay)
         stream = events_stream(spark, replay).selectExpr(
             "user_id", "ts", "unix_micros(ts) AS us", "event_id"
         )
@@ -337,7 +320,7 @@ def q190_tws_timer_sessions(spark, sf_dir):
         ).localCheckpoint()
 
     cached = session_state(spark, sf_dir, "tws_timer", build)
-    return cached.filter(F.col("user_id") != SENTINEL).select(
+    return cached.filter(F.col("user_id") != FAR_FUTURE_USER).select(
         "user_id", "start_us", "end_us", "n"
     )
 
@@ -583,24 +566,18 @@ def q244_stream_dedup_readback(spark, sf_dir):
 
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
     from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+        append_wave,
         replay_events,
         stream_dedup,
     )
 
     def build(base):
         from multi_threaded_mapreduce_framework_spark.sources import load_table
-        from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-            _data_files,
-            bump_new_file_mtimes,
-        )
 
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
-        pre_wave = set(_data_files(replay))
-        load_table(spark, sf_dir, "events").repartition(3).write.mode(
-            "append"
-        ).parquet(replay)
-        bump_new_file_mtimes(replay, pre_wave)  # duplicate wave replays after
+        # the duplicate wave replays after the original
+        append_wave(replay, load_table(spark, sf_dir, "events").repartition(3))
         stream = stream_dedup(
             events_stream(spark, replay).select("event_id", "event_type"),
             ["event_id"],
@@ -648,23 +625,16 @@ def q248_stream_dedup_watermark(spark, sf_dir):
     from multi_threaded_mapreduce_framework_spark.sources import load_table
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
     from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+        append_wave,
         replay_events,
         stream_dedup_within_watermark,
     )
 
     def build(base):
-        from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-            _data_files,
-            bump_new_file_mtimes,
-        )
-
         replay = os.path.join(base, "replay")
         replay_events(spark, sf_dir, replay, n_chunks=3)
-        pre_wave = set(_data_files(replay))
-        load_table(spark, sf_dir, "events").repartition(3).write.mode(
-            "append"
-        ).parquet(replay)
-        bump_new_file_mtimes(replay, pre_wave)  # duplicate wave replays after
+        # the duplicate wave replays after the original
+        append_wave(replay, load_table(spark, sf_dir, "events").repartition(3))
         # Delay >= the fixture's whole event-time span: the watermark
         # can never pass first_seen_ts + delay before the stream
         # drains, so no key's dedup state evicts mid-replay and the
@@ -706,13 +676,11 @@ def q256_stream_window_census(spark, sf_dir):
     (files, Kafka, a warehouse table) actually consumes, since
     complete mode rewrites the world every batch.
 
-    Determinism: time-ordered replay (q190's discipline) keeps every
-    event inside the 2-hour watermark delay, so nothing is
-    late-dropped; one far-future sentinel event advances the final
-    watermark past every real window end, so every real window
-    finalizes and is emitted; the sentinel's own window can never
-    finalize (nothing arrives after it), so it is provably absent from
-    the append output — the readback needs no filter.
+    Determinism: the time-ordered replay keeps every event inside the
+    2-hour watermark delay, so nothing is late-dropped, and the
+    far-future event finalizes every real window without appearing in
+    the append output (the replay law in ``streaming/windowed.py``) —
+    the readback needs no filter.
 
     Scale shape: state is one (cnt, sum) pair per open (window, type)
     — bounded by windows-per-watermark-horizon x |types|, NOT by
@@ -725,47 +693,20 @@ def q256_stream_window_census(spark, sf_dir):
 
 def _append_window_run(spark, sf_dir, tag, duration, slide):
     """Shared q256/q258 machinery: time-ordered replay + far-future
-    sentinel + append-mode watermarked window aggregation (count +
-    integer-micro value sum), readback held per session under ``tag``.
-    Replay order (chunks, then sentinel last) is pinned with explicit
-    ``os.utime`` mtimes, never wall-clock sleeps (r9 advisor fix)."""
+    event + append-mode watermarked window aggregation (count +
+    integer-micro value sum), readback held per session under ``tag``."""
     import pyspark.sql.functions as F
 
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
     from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        _data_files,
-        bump_new_file_mtimes,
+        append_far_future_event,
         replay_events_time_ordered,
     )
-
-    SENTINEL = 999_999_999
 
     def build(base):
         replay = os.path.join(base, "replay")
         replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
-        ev = spark.read.parquet(replay)
-        # sentinel columns cast to the FIXTURE's own types (value may be
-        # DOUBLE or DECIMAL depending on the corpus writer) — a mixed-
-        # schema replay dir breaks the stream's parquet read of `value`
-        vt = ev.schema["value"].dataType.simpleString()
-        sent = (
-            ev.orderBy(F.desc("ts"))
-            .limit(1)
-            .selectExpr(
-                f"CAST({SENTINEL} AS BIGINT) AS event_id",
-                f"CAST({SENTINEL} AS BIGINT) AS user_id",
-                "'click' AS event_type",
-                "ts + INTERVAL 30 DAYS AS ts",
-                f"CAST(0.0 AS {vt}) AS value",
-                "'{}' AS props",
-            )
-            .select(*ev.columns)
-        )
-        # the sentinel must replay LAST: stamp its files with an mtime
-        # strictly above every chunk's (explicit utime, not a sleep)
-        pre_sentinel = set(_data_files(replay))
-        sent.coalesce(1).write.mode("append").parquet(replay)
-        bump_new_file_mtimes(replay, pre_sentinel)
+        append_far_future_event(spark, replay)
         win = (
             F.window("ts", duration, slide) if slide else F.window("ts", duration)
         )
@@ -820,9 +761,8 @@ def q258_stream_sliding_census(spark, sf_dir):
     into windowDuration/slide state rows, so state and output are 4x
     the tumbling form's — bounded by slides-per-watermark-horizon x
     |types|, still independent of event count.  Emission contract,
-    sentinel discipline, and integer-micro exactness are exactly
-    q256's (shared ``_append_window_run`` machinery); the sentinel's
-    4 open windows can never finalize, so they are provably absent.
+    far-future event and integer-micro exactness are exactly q256's
+    (shared ``_append_window_run`` machinery).
     """
     return _append_window_run(
         spark, sf_dir, "sliding_census", "1 hour", "15 minutes"
@@ -865,14 +805,12 @@ def q262_stream_restart_readback(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from multi_threaded_mapreduce_framework_spark.sources import load_table
-    from multi_threaded_mapreduce_framework_spark.streaming import events_stream
+    from multi_threaded_mapreduce_framework_spark.streaming import (
+        append_wave,
+        events_stream,
+    )
 
     def build(base):
-        from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-            _data_files,
-            bump_new_file_mtimes,
-        )
-
         replay = os.path.join(base, "replay")
         full = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "ts", "value"
@@ -893,9 +831,7 @@ def q262_stream_restart_readback(spark, sf_dir):
             return _converge(agg, base, "complete")
 
         run_once()  # first half only, then a clean stop
-        pre_downtime = set(_data_files(replay))
-        second.repartition(2).write.mode("append").parquet(replay)
-        bump_new_file_mtimes(replay, pre_downtime)  # downtime arrivals sort after
+        append_wave(replay, second.repartition(2))  # arrives during downtime
         # NEW query object, same checkpoint: resumes state
         return run_once().localCheckpoint()
 
@@ -937,16 +873,12 @@ def q263_stream_file_sink_readback(spark, sf_dir):
     from multi_threaded_mapreduce_framework_spark.sources import load_table
     from multi_threaded_mapreduce_framework_spark.streaming import events_stream
     from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+        append_wave,
         replay_events,
         stream_dedup,
     )
 
     def build(base):
-        from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-            _data_files,
-            bump_new_file_mtimes,
-        )
-
         replay = os.path.join(base, "replay")
         ckpt = os.path.join(base, "ckpt")
         sink = os.path.join(base, "sink")
@@ -972,11 +904,13 @@ def q263_stream_file_sink_readback(spark, sf_dir):
                 q.stop()
 
         run_once()  # the original wave lands in the sink
-        pre_wave = set(_data_files(replay))
-        load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "ts"
-        ).repartition(3).write.mode("append").parquet(replay)
-        bump_new_file_mtimes(replay, pre_wave)  # duplicate wave sorts after
+        # the duplicate wave arrives during downtime
+        append_wave(
+            replay,
+            load_table(spark, sf_dir, "events")
+            .select("event_id", "event_type", "ts")
+            .repartition(3),
+        )
         run_once()  # restart: recovered dedup state absorbs the wave
         return (
             spark.read.parquet(sink)
@@ -1176,40 +1110,17 @@ from multi_threaded_mapreduce_framework_spark.queries.t2_text import (  # noqa: 
 
 
 def build_session_replay(spark, sf_dir, replay):
-    """q269's stream input, factored (r12, VERDICT r11 item 9 — so the
-    bench's streaming hot-path lane runs the IDENTICAL scenario): the
-    time-ordered events replay plus the far-future sentinel appended
-    last (distinct user; advances the final watermark past every real
-    session's end; its own session can never finalize, so it is
-    provably absent from the append output)."""
-    import pyspark.sql.functions as F
-
+    """q269's stream input, factored so the bench's streaming lane runs
+    the IDENTICAL scenario: the time-ordered events replay in 4 chunks,
+    then the far-future event (the replay law in
+    ``streaming/windowed.py``)."""
     from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        _data_files,
-        bump_new_file_mtimes,
+        append_far_future_event,
         replay_events_time_ordered,
     )
 
-    SENTINEL = 999_999_999
     replay_events_time_ordered(spark, sf_dir, replay, n_chunks=4)
-    ev = spark.read.parquet(replay)
-    vt = ev.schema["value"].dataType.simpleString()
-    sent = (
-        ev.orderBy(F.desc("ts"))
-        .limit(1)
-        .selectExpr(
-            f"CAST({SENTINEL} AS BIGINT) AS event_id",
-            f"CAST({SENTINEL} AS BIGINT) AS user_id",
-            "'click' AS event_type",
-            "ts + INTERVAL 30 DAYS AS ts",
-            f"CAST(0.0 AS {vt}) AS value",
-            "'{}' AS props",
-        )
-        .select(*ev.columns)
-    )
-    pre_sentinel = set(_data_files(replay))
-    sent.coalesce(1).write.mode("append").parquet(replay)
-    bump_new_file_mtimes(replay, pre_sentinel)  # sentinel replays last
+    append_far_future_event(spark, replay)
 
 
 def run_session_stream(spark, replay, ckpt, table):
@@ -1267,10 +1178,9 @@ def q269_stream_session_census(spark, sf_dir):
     only when the watermark passes last_event + gap, and every future
     event in a time-ordered replay is newer than the chunk max, hence
     > gap beyond that session's last event, so early finalization can
-    never split a true session.  The far-future sentinel (distinct
-    user) advances the final watermark past every real session's end;
-    its own session can never finalize (nothing arrives after it), so
-    it is provably absent from the append output — no readback filter.
+    never split a true session.  The far-future event finalizes every
+    real session without appearing in the append output — no readback
+    filter.
 
     Scale shape: state = one interval-set per user with an OPEN
     session — bounded by active users per watermark horizon, evicted

@@ -10,10 +10,7 @@ from multi_threaded_mapreduce_framework_spark.streaming.kafka_shim import (
 from multi_threaded_mapreduce_framework_spark.streaming.joins import (
     funnel_daily_counts,
     stream_static_join,
-    stream_stream_full_join,
-    stream_stream_inner_join,
-    stream_stream_left_join,
-    stream_stream_semi_join,
+    stream_stream_join,
 )
 from multi_threaded_mapreduce_framework_spark.streaming.matview import (
     compact_matview,
@@ -28,6 +25,9 @@ from multi_threaded_mapreduce_framework_spark.streaming.stateful import (
     running_user_totals,
 )
 from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
+    append_far_future_event,
+    append_wave,
+    drain_to_convergence,
     events_stream,
     replay_events,
     run_to_convergence,
@@ -46,16 +46,16 @@ __all__ = [
     "write_kafka_replay",
     "funnel_daily_counts",
     "stream_static_join",
-    "stream_stream_semi_join",
-    "stream_stream_full_join",
-    "stream_stream_inner_join",
-    "stream_stream_left_join",
+    "stream_stream_join",
     "foreach_batch_fanout",
     "foreach_batch_parquet",
     "compact_matview",
     "read_matview",
     "start_incremental_matview",
     "running_user_totals",
+    "append_far_future_event",
+    "append_wave",
+    "drain_to_convergence",
     "events_stream",
     "replay_events",
     "run_to_convergence",

@@ -21,7 +21,38 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def _sides(left: DataFrame, right: DataFrame, watermark: str):
+def stream_stream_join(
+    left: DataFrame,
+    right: DataFrame,
+    how: str,
+    max_lag: str = "1 hour",
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """Join two event streams on user_id where the right event lands
+    within ``[l_ts, l_ts + max_lag]`` — "purchase within an hour of the
+    click".  Each side's buffered state is evicted once the opposite
+    watermark clears its join window (watermark + range bound = bounded
+    state).  ``how`` is a Spark join type:
+
+    - ``"inner"``: a match emits as soon as both rows arrive.
+    - ``"left_outer"``: a left row with no match emits null-padded only
+      after the watermark passes ``l_ts + max_lag`` (until then a match
+      could still arrive).
+    - ``"full_outer"``: unmatched rows from BOTH sides emit null-padded
+      once the watermark clears their window — left rows after
+      ``l_ts + max_lag``, right rows after their own ``r_ts`` (a right
+      event can only match earlier-or-equal left events).
+    - ``"left_semi"``: "which left events converted at all" — each left
+      event emits AT MOST ONCE (left columns only) when its FIRST match
+      arrives; unmatched left rows are dropped when the watermark clears
+      their window.  Output is bounded by the LEFT stream, not the pair
+      count, so a hot user's N×M pair explosion is never materialized.
+
+    Inner and semi emit eagerly.  The outer forms converge on a bounded
+    replay only after the two-generation sentinel drain
+    (``streaming/windowed.py::drain_to_convergence``), which is how a
+    production pipeline flushes a historical backfill too.
+    """
     l = left.withWatermark("ts", watermark).select(
         F.col("user_id").alias("l_user"),
         F.col("ts").alias("l_ts"),
@@ -32,85 +63,12 @@ def _sides(left: DataFrame, right: DataFrame, watermark: str):
         F.col("ts").alias("r_ts"),
         F.col("event_id").alias("r_event"),
     )
-    return l, r
-
-
-def _range_cond(max_lag: str):
-    return (
+    cond = (
         (F.col("l_user") == F.col("r_user"))
         & (F.col("r_ts") >= F.col("l_ts"))
         & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"interval {max_lag}"))
     )
-
-
-def stream_stream_inner_join(
-    left: DataFrame,
-    right: DataFrame,
-    max_lag: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Inner-join two event streams on user_id where the right event
-    lands within ``[l_ts, l_ts + max_lag]`` — "purchase within an hour
-    of the click". Matches are emitted as soon as both rows arrive;
-    each side's buffered state is evicted once the opposite watermark
-    clears its join window (watermark + range bound = bounded state).
-    """
-    l, r = _sides(left, right, watermark)
-    return l.join(r, _range_cond(max_lag), "inner")
-
-
-def stream_stream_left_join(
-    left: DataFrame,
-    right: DataFrame,
-    max_lag: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Left-outer variant: a left event with no match emits its
-    null-padded row only after the watermark passes ``l_ts + max_lag``
-    (until then a match could still arrive). Converging a replay to the
-    exact batch answer therefore needs the watermark advanced past the
-    last real event — the test appends a far-future sentinel row to
-    both streams to flush the tail, which is how a production pipeline
-    drains a historical backfill too.
-    """
-    l, r = _sides(left, right, watermark)
-    return l.join(r, _range_cond(max_lag), "left_outer")
-
-
-def stream_stream_full_join(
-    left: DataFrame,
-    right: DataFrame,
-    max_lag: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Full-outer variant: unmatched rows from BOTH sides emit
-    null-padded once the watermark clears their join window — left
-    rows after ``l_ts + max_lag``, right rows after their own ``r_ts``
-    (a right event can only match earlier-or-equal left events). Same
-    drain caveat as the left join for historical replays.
-    """
-    l, r = _sides(left, right, watermark)
-    return l.join(r, _range_cond(max_lag), "full_outer")
-
-
-def stream_stream_semi_join(
-    left: DataFrame,
-    right: DataFrame,
-    max_lag: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Left-SEMI variant — "which left events converted at all": each
-    left event is emitted AT MOST ONCE (its own columns only, no right
-    payload), as soon as its FIRST match arrives; unmatched left rows
-    are silently dropped when the watermark clears their join window.
-    Emission is eager like the inner join (no drain sentinel needed to
-    converge a bounded replay) while the output volume is bounded by
-    the LEFT stream, not the pair count — the shape of a 100 TB/day
-    "converted clicks" feed where a hot user's N×M pair explosion
-    (the inner join's output) is never materialized.
-    """
-    l, r = _sides(left, right, watermark)
-    return l.join(r, _range_cond(max_lag), "left_semi")
+    return l.join(r, cond, how)
 
 
 def stream_static_join(
@@ -125,7 +83,7 @@ def stream_static_join(
     static side is fully known every micro-batch — each batch plans an
     ordinary batch join against the dimension, and in a LEFT join the
     unmatched stream rows emit their null-padded form IMMEDIATELY (no
-    watermark gate; contrast ``stream_stream_left_join``, where a null
+    watermark gate; contrast a left ``stream_stream_join``, where a null
     flush must wait for the watermark to prove no match can arrive).
 
     The dimension is broadcast-hinted: at 100 TB/day the stream side
@@ -151,9 +109,10 @@ def funnel_daily_counts(
     stateful-after-stateful in append mode because the join emits rows
     with an event-time column (l_ts) still governed by the watermark;
     the downstream window finalizes once the watermark passes the day
-    boundary plus the join's lag allowance.
+    boundary plus the join's lag allowance, so a bounded replay needs
+    the two-generation sentinel drain to emit its last day.
     """
-    joined = stream_stream_inner_join(left, right, max_lag, watermark)
+    joined = stream_stream_join(left, right, "inner", max_lag, watermark)
     return (
         joined.groupBy(F.window("l_ts", "1 day").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_converted_events"))

@@ -14,10 +14,39 @@ finalized), and ``session_window`` state is evicted per the same
 watermark — this is what makes the operator runnable on an unbounded
 100 TB/day stream, unlike the batch q23 whose window-lag plan needs the
 full history per user.
+
+The replay law.  This is the only module that knows how a replay
+directory grows; every other module appends through the functions
+below.
+
+- Order.  The file source lists a directory's files by modification
+  time, so a replay's order is its files' mtimes.  ``append_wave``
+  writes a wave, then stamps every new file strictly after every file
+  already there (``bump_new_file_mtimes``): the listing order is the
+  append order on any filesystem, with no wall-clock sleeps.
+- Types.  A sentinel row is cast to the replay's own column types, so a
+  replay whose ``value`` is DECIMAL never gains a DOUBLE file.
+- The far-future event (``append_far_future_event``): one click by user
+  ``FAR_FUTURE_USER`` (999_999_999), 30 days after the replay's last
+  ``ts``.  Its arrival moves the final watermark past every real event,
+  so append-mode windows, sessions and event-time timers finalize
+  everything real.  Its own window never finalizes (nothing arrives
+  after it), so it is absent from append output; a timer-driven
+  operator may still emit it, and its reader drops that user.  One
+  final watermark is all an append window or a session needs.
+- The two-generation drain (``drain_to_convergence``): a click by user
+  -1 and a purchase by user -2 six hours later, appended at 2025-01-01
+  and again 30 days on, with a full drain after the first run and after
+  each pair.  Outer stream-stream joins and windows chained after a join
+  need it: the first pair moves the watermark past every real event, and
+  the second triggers the batch in which the expired state emits.  The
+  sentinel users never match each other, so inner and semi joins emit
+  the same real rows with or without it; readers drop negative users.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 import time as _time
 
@@ -79,6 +108,65 @@ def bump_new_file_mtimes(out_dir: str, before: set[str], bump: float = 1.0) -> N
         _time.sleep(max(t - _time.time(), 0.0) + 0.001)
 
 
+def append_wave(replay: str, df: DataFrame) -> None:
+    """Append ``df`` to ``replay`` and stamp its new files after every
+    existing one, so the stream replays the wave last.  The caller
+    chooses the wave's file count (``repartition``/``coalesce``)."""
+    before = set(_data_files(replay)) if os.path.isdir(replay) else set()
+    df.write.mode("append").parquet(replay)
+    bump_new_file_mtimes(replay, before)
+
+
+FAR_FUTURE_USER = 999_999_999
+
+# Each events column of a sentinel row, from a relation with columns
+# (uid, kind, at); cast to the replay's own type on append.
+_SENTINEL_COLUMNS = {
+    "event_id": "uid",
+    "user_id": "uid",
+    "event_type": "kind",
+    "ts": "at",
+    "value": "0.0",
+    "props": "'{}'",
+}
+
+
+def _append_sentinels(replay: str, rows: DataFrame) -> None:
+    schema = rows.sparkSession.read.parquet(replay).schema
+    append_wave(
+        replay,
+        rows.selectExpr(
+            *(
+                f"CAST({_SENTINEL_COLUMNS[f.name]} AS {f.dataType.simpleString()})"
+                f" AS {f.name}"
+                for f in schema
+            )
+        ).coalesce(1),
+    )
+
+
+def append_far_future_event(spark: SparkSession, replay: str) -> None:
+    """Append the far-future click (user ``FAR_FUTURE_USER``, 30 days
+    after the replay's last ``ts``) as one file that replays last."""
+    last = spark.read.parquet(replay).orderBy(F.desc("ts")).limit(1)
+    _append_sentinels(
+        replay,
+        last.selectExpr(
+            f"{FAR_FUTURE_USER} AS uid",
+            "'click' AS kind",
+            "ts + INTERVAL 30 DAYS AS at",
+        ),
+    )
+
+
+def _append_sentinel_pair(spark: SparkSession, replay: str, days_ahead: int):
+    t0 = datetime.datetime(2025, 1, 1) + datetime.timedelta(days=days_ahead)
+    rows = [(-1, "click", t0), (-2, "purchase", t0 + datetime.timedelta(hours=6))]
+    _append_sentinels(
+        replay, spark.createDataFrame(rows, "uid bigint, kind string, at timestamp")
+    )
+
+
 def replay_events(
     spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 4
 ) -> None:
@@ -98,8 +186,7 @@ def replay_events_time_ordered(
     race the watermark past data still in later chunks).  Chunk
     boundaries are ntile ranges of ``ts``; within a chunk rows stay
     unordered (micro-batch internal disorder is the operator's job).
-    Chunk order is pinned with explicit strictly-increasing mtimes
-    (``bump_new_file_mtimes``), not wall-clock sleeps."""
+    Each chunk is one ``append_wave``."""
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.selectExpr(
         f"ntile({n_chunks}) OVER (ORDER BY ts, event_id) AS tile",
@@ -107,13 +194,9 @@ def replay_events_time_ordered(
         "event_id",
     )
     tiled = ev.join(bounds, ["ts", "event_id"])
-    seen: set[str] = set()
     for i in range(1, n_chunks + 1):
-        tiled.filter(F.col("tile") == i).drop("tile").coalesce(1).write.mode(
-            "append"
-        ).parquet(out_dir)
-        bump_new_file_mtimes(out_dir, seen)
-        seen = set(_data_files(out_dir))
+        chunk = tiled.filter(F.col("tile") == i).drop("tile")
+        append_wave(out_dir, chunk.coalesce(1))
 
 
 def events_stream(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -222,12 +305,34 @@ def run_to_convergence(
     processed all available input, stop the query, and return the sink
     table ``spark.table(name)``.  ``checkpoint``, when given, is the
     query's checkpoint location."""
-    writer = agg.writeStream.outputMode(output_mode).format("memory").queryName(name)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
+    q = _start_memory_sink(agg, name, output_mode, checkpoint)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     return agg.sparkSession.table(name)
+
+
+def drain_to_convergence(
+    stream_df: DataFrame, replay: str, name: str, checkpoint: str | None = None
+) -> DataFrame:
+    """``run_to_convergence`` in append mode plus the two-generation
+    sentinel drain (module docstring) over ``replay``, the directory the
+    stream reads; returns the sink table, sentinel rows included."""
+    spark = stream_df.sparkSession
+    q = _start_memory_sink(stream_df, name, "append", checkpoint)
+    try:
+        q.processAllAvailable()
+        for days_ahead in (0, 30):
+            _append_sentinel_pair(spark, replay, days_ahead)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(name)
+
+
+def _start_memory_sink(agg, name, output_mode, checkpoint):
+    writer = agg.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -18,7 +17,7 @@ from multi_threaded_mapreduce_framework_spark.functions.bloom import (
 from multi_threaded_mapreduce_framework_spark.functions.heavy_hitters import mg_candidates
 from multi_threaded_mapreduce_framework_spark.plans import executed_plan
 from multi_threaded_mapreduce_framework_spark.queries import all_queries
-from multi_threaded_mapreduce_framework_spark.sources import layout_tag, load_table
+from multi_threaded_mapreduce_framework_spark.sources import load_table
 
 QUERIES = all_queries()
 
@@ -163,7 +162,7 @@ def test_q135_equals_exact_groupby(spark, sf_dir):
 
 
 # -------------------------------------------------------------- z-order
-def test_q137_zorder_files_have_tight_minmax(spark, sf_dir):
+def test_q137_zorder_files_have_tight_minmax(spark, sf_dir, build_dir):
     """After the z-order rewrite, each parquet file must cover a small
     box in (l_partkey, l_suppkey) space: per-file min/max span well
     below the global span on BOTH dimensions (a plain single-key sort
@@ -171,8 +170,7 @@ def test_q137_zorder_files_have_tight_minmax(spark, sf_dir):
     QUERIES["q137_zorder_skipping"].builder(spark, sf_dir).collect()
     import pyarrow.parquet as pq
 
-    tag = layout_tag(spark, sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "mtmrf_layout", tag, "lineitem_zorder")
+    base = build_dir(sf_dir, "lineitem_zorder")
     files = [
         os.path.join(base, f) for f in os.listdir(base) if f.endswith(".parquet")
     ]

@@ -120,6 +120,26 @@ def test_rewritten_events_rerun_the_stream(spark, sf_copy):
     assert {r[0] for r in got} == before - {dropped}
 
 
+def test_layout_follows_a_rewritten_fixture_with_the_same_basename(spark, sf_copy):
+    """q115's partitioned layout belongs to the fixture it was built
+    from: after a run on sf0.001, a same-named copy whose lineitem holds
+    the first half of the rows must read its own layout (DuckDB oracle
+    on the copy)."""
+    import duckdb
+
+    name = "q115_partition_pruned_scan"
+    assert _rows(name, spark, SF)
+    path = os.path.join(sf_copy, "lineitem.parquet")
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, table.num_rows // 2), path, coerce_timestamps=None)
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{path}')")
+    expected = sorted(con.execute(QUERIES[name].oracle).fetchall())
+    assert expected
+    assert _rows(name, spark, sf_copy) == expected
+
+
 def _module_cache_dicts(tree):
     """Names of module-level ``*_CACHE`` / ``*_MEMO`` dict assignments."""
     found = []

@@ -4,21 +4,20 @@ equal the identical join run as a batch query on the same events.
 Covers the two state-semantics regimes: inner (matches emitted eagerly,
 state evicted by watermark + range bound) and left-outer (null-padded
 rows emitted only after the watermark passes the join window — the test
-drains the tail with far-future sentinel rows, the same way a
-production backfill is flushed)."""
+drains the tail with ``drain_to_convergence``'s sentinel rows, the same
+way a production backfill is flushed)."""
 
 from __future__ import annotations
-
-import datetime
 
 import pyspark.sql.functions as F
 import pytest
 
 from multi_threaded_mapreduce_framework_spark.streaming import (
+    drain_to_convergence,
     events_stream,
     replay_events,
-    stream_stream_inner_join,
-    stream_stream_left_join,
+    run_to_convergence,
+    stream_stream_join,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -58,68 +57,34 @@ def _batch_join(spark, replay_dir, how):
     return {tuple(row) for row in l.join(r, cond, how).collect()}
 
 
-def _write_sentinels(spark, replay_dir, days_ahead):
-    base = datetime.datetime(2025, 1, 1) + datetime.timedelta(days=days_ahead)
-    rows = [
-        (-1, base, -1, "click", 0.0, "{}"),
-        (-2, base + datetime.timedelta(hours=6), -2, "purchase", 0.0, "{}"),
-    ]
-    schema = spark.read.parquet(replay_dir).schema
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
-        replay_dir
-    )
-
-
 def test_inner_join_converges_to_batch(spark, replay_dir):
-    joined = stream_stream_inner_join(
+    joined = stream_stream_join(
         events_stream(spark, replay_dir).filter(F.col("event_type") == "click"),
         events_stream(spark, replay_dir).filter(F.col("event_type") == "purchase"),
+        "inner",
         max_lag=LAG,
         watermark=WM,
     )
-    q = joined.writeStream.outputMode("append").format("memory").queryName(
-        "ss_inner"
-    ).start()
-    try:
-        q.processAllAvailable()
-        got = {tuple(row) for row in spark.table("ss_inner").collect()}
-        assert got == _batch_join(spark, replay_dir, "inner")
-        assert len(got) > 0
-    finally:
-        q.stop()
+    res = run_to_convergence(joined, "ss_inner", "append")
+    got = {tuple(row) for row in res.collect()}
+    assert got == _batch_join(spark, replay_dir, "inner")
+    assert len(got) > 0
 
 
 def test_left_outer_join_flushes_after_watermark(spark, replay_dir):
-    joined = stream_stream_left_join(
+    joined = stream_stream_join(
         events_stream(spark, replay_dir).filter(F.col("event_type") == "click"),
         events_stream(spark, replay_dir).filter(F.col("event_type") == "purchase"),
+        "left_outer",
         max_lag=LAG,
         watermark=WM,
     )
-    q = joined.writeStream.outputMode("append").format("memory").queryName(
-        "ss_left"
-    ).start()
-    try:
-        q.processAllAvailable()
-        # two sentinel generations: the first advances the watermark past
-        # every real event, the second triggers the batch in which the
-        # now-expired left state emits its null-padded rows
-        _write_sentinels(spark, replay_dir, days_ahead=0)
-        q.processAllAvailable()
-        _write_sentinels(spark, replay_dir, days_ahead=30)
-        q.processAllAvailable()
-        got = {
-            tuple(row)
-            for row in spark.table("ss_left")
-            .filter(F.col("l_user") >= 0)
-            .collect()
-        }
-        batch = _batch_join(spark, replay_dir, "left_outer")
-        assert got == batch
-        # the outer rows (clicks with no purchase inside the lag) exist
-        assert any(row[3] is None for row in got)
-    finally:
-        q.stop()
+    res = drain_to_convergence(joined, replay_dir, "ss_left")
+    got = {tuple(row) for row in res.filter(F.col("l_user") >= 0).collect()}
+    batch = _batch_join(spark, replay_dir, "left_outer")
+    assert got == batch
+    # the outer rows (clicks with no purchase inside the lag) exist
+    assert any(row[3] is None for row in got)
 
 
 def test_chained_stateful_funnel_converges_to_batch(spark, replay_dir):
@@ -131,83 +96,57 @@ def test_chained_stateful_funnel_converges_to_batch(spark, replay_dir):
         max_lag=LAG,
         watermark=WM,
     )
-    q = agg.writeStream.outputMode("append").format("memory").queryName(
-        "ss_funnel"
-    ).start()
-    try:
-        q.processAllAvailable()
-        # append-mode windows only emit once the watermark passes them:
-        # flush with two sentinel generations (see left-outer test)
-        _write_sentinels(spark, replay_dir, days_ahead=0)
-        q.processAllAvailable()
-        _write_sentinels(spark, replay_dir, days_ahead=30)
-        q.processAllAvailable()
-        got = {
-            tuple(row)
-            for row in spark.table("ss_funnel").collect()
-            if not row.day.startswith("2025")  # sentinel windows
-        }
-        batch = {
-            (str(r.day), r.n)
-            for r in spark.read.parquet(replay_dir)
+    # append-mode windows only emit once the watermark passes them
+    got = {
+        tuple(row)
+        for row in drain_to_convergence(agg, replay_dir, "ss_funnel").collect()
+        if not row.day.startswith("2025")  # sentinel windows
+    }
+    batch = {
+        (str(r.day), r.n)
+        for r in spark.read.parquet(replay_dir)
+        .filter(F.col("user_id") >= 0)
+        .filter(F.col("event_type") == "click")
+        .alias("c")
+        .join(
+            spark.read.parquet(replay_dir)
             .filter(F.col("user_id") >= 0)
-            .filter(F.col("event_type") == "click")
-            .alias("c")
-            .join(
-                spark.read.parquet(replay_dir)
-                .filter(F.col("user_id") >= 0)
-                .filter(F.col("event_type") == "purchase")
-                .alias("p"),
-                (F.col("c.user_id") == F.col("p.user_id"))
-                & (F.col("p.ts") >= F.col("c.ts"))
-                & (F.col("p.ts") <= F.col("c.ts") + F.expr(f"interval {LAG}")),
-            )
-            .groupBy(F.to_date("c.ts").alias("day"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        assert got == batch
-        assert len(got) > 0
-    finally:
-        q.stop()
+            .filter(F.col("event_type") == "purchase")
+            .alias("p"),
+            (F.col("c.user_id") == F.col("p.user_id"))
+            & (F.col("p.ts") >= F.col("c.ts"))
+            & (F.col("p.ts") <= F.col("c.ts") + F.expr(f"interval {LAG}")),
+        )
+        .groupBy(F.to_date("c.ts").alias("day"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert got == batch
+    assert len(got) > 0
 
 
 def test_full_outer_join_flushes_both_sides(spark, replay_dir):
-    from multi_threaded_mapreduce_framework_spark.streaming import (
-        stream_stream_full_join,
-    )
-
-    joined = stream_stream_full_join(
+    joined = stream_stream_join(
         events_stream(spark, replay_dir).filter(F.col("event_type") == "click"),
         events_stream(spark, replay_dir).filter(F.col("event_type") == "purchase"),
+        "full_outer",
         max_lag=LAG,
         watermark=WM,
     )
-    q = joined.writeStream.outputMode("append").format("memory").queryName(
-        "ss_full"
-    ).start()
-    try:
-        q.processAllAvailable()
-        _write_sentinels(spark, replay_dir, days_ahead=0)
-        q.processAllAvailable()
-        _write_sentinels(spark, replay_dir, days_ahead=30)
-        q.processAllAvailable()
-        got = {
-            tuple(row)
-            for row in spark.table("ss_full")
-            .filter(
-                (F.coalesce(F.col("l_user"), F.lit(0)) >= 0)
-                & (F.coalesce(F.col("r_user"), F.lit(0)) >= 0)
-            )
-            .collect()
-        }
-        batch = _batch_join(spark, replay_dir, "full_outer")
-        assert got == batch
-        # unmatched rows from BOTH sides are present
-        assert any(row[3] is None for row in got)  # click, no purchase
-        assert any(row[0] is None for row in got)  # purchase, no click
-    finally:
-        q.stop()
+    got = {
+        tuple(row)
+        for row in drain_to_convergence(joined, replay_dir, "ss_full")
+        .filter(
+            (F.coalesce(F.col("l_user"), F.lit(0)) >= 0)
+            & (F.coalesce(F.col("r_user"), F.lit(0)) >= 0)
+        )
+        .collect()
+    }
+    batch = _batch_join(spark, replay_dir, "full_outer")
+    assert got == batch
+    # unmatched rows from BOTH sides are present
+    assert any(row[3] is None for row in got)  # click, no purchase
+    assert any(row[0] is None for row in got)  # purchase, no click
 
 
 def test_semi_join_exactly_once_converges_to_batch(spark, replay_dir):
@@ -216,24 +155,15 @@ def test_semi_join_exactly_once_converges_to_batch(spark, replay_dir):
     fails even where set equality would hide it."""
     from collections import Counter
 
-    from multi_threaded_mapreduce_framework_spark.streaming import (
-        stream_stream_semi_join,
-    )
-
-    joined = stream_stream_semi_join(
+    joined = stream_stream_join(
         events_stream(spark, replay_dir).filter(F.col("event_type") == "click"),
         events_stream(spark, replay_dir).filter(F.col("event_type") == "purchase"),
+        "left_semi",
         max_lag=LAG,
         watermark=WM,
     )
-    q = joined.writeStream.outputMode("append").format("memory").queryName(
-        "ss_semi"
-    ).start()
-    try:
-        q.processAllAvailable()
-        got = Counter(tuple(row) for row in spark.table("ss_semi").collect())
-    finally:
-        q.stop()
+    res = run_to_convergence(joined, "ss_semi", "append")
+    got = Counter(tuple(row) for row in res.collect())
     ev = spark.read.parquet(replay_dir).filter(F.col("user_id") >= 0)
     l = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("l_user"),

@@ -12,7 +12,6 @@ Usage: python tools/ab_pair.py [--pairs N] [--sf-dir DIR] old.py new.py
 from __future__ import annotations
 
 import argparse
-import gc
 import importlib.util
 import os
 import statistics
@@ -21,6 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import release_query_state
 from multi_threaded_mapreduce_framework_spark.session import get_spark
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -41,12 +41,7 @@ def run_once(spark, build, sf_dir: str) -> float:
     df.write.format("noop").mode("overwrite").save()
     dt = time.time() - t0
     del df
-    gc.collect()
-    spark.catalog.clearCache()
-    try:
-        spark._jvm.System.gc()
-    except Exception:  # noqa: BLE001
-        pass
+    release_query_state(spark)
     return dt
 
 

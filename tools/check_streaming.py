@@ -33,6 +33,9 @@ from multi_threaded_mapreduce_framework_spark.streaming.protoshim import ensure_
 ensure_protobuf()
 from multi_threaded_mapreduce_framework_spark.queries import all_queries
 from multi_threaded_mapreduce_framework_spark.streaming import (
+    append_far_future_event,
+    append_wave,
+    drain_to_convergence,
     events_stream,
     kafka_wire_stream,
     parse_events,
@@ -42,7 +45,7 @@ from multi_threaded_mapreduce_framework_spark.streaming import (
     sliding_window_counts,
     stream_dedup,
     stream_dedup_within_watermark,
-    stream_stream_inner_join,
+    stream_stream_join,
     tumbling_window_counts,
     write_kafka_replay,
 )
@@ -669,28 +672,11 @@ def bitmap_matview_vs_batch_distinct(spark, sf_dir, replay_dir, work):
 
 # ------------------------------------------------------------------ joins
 def _own_replay(spark, sf_dir, work, name):
-    """Private replay dir for scenarios that append sentinel rows (the
-    shared replay_dir must stay pristine for later scenarios)."""
+    """Private replay dir for scenarios that drain with sentinel rows
+    (the shared replay_dir must stay pristine for later scenarios)."""
     d = os.path.join(work, name)
     replay_events(spark, sf_dir, d, n_chunks=4)
     return d
-
-
-def _write_sentinels(spark, replay_dir, days_ahead):
-    """Far-future click+purchase pair: advances the watermark so outer
-    joins / append-mode windows flush their buffered tails — the same
-    drain step a production historical backfill performs."""
-    import datetime
-
-    base = datetime.datetime(2025, 1, 1) + datetime.timedelta(days=days_ahead)
-    rows = [
-        (-1, base, -1, "click", 0.0, "{}"),
-        (-2, base + datetime.timedelta(hours=6), -2, "purchase", 0.0, "{}"),
-    ]
-    schema = spark.read.parquet(replay_dir).schema
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
-        replay_dir
-    )
 
 
 def _batch_range_join(spark, replay_dir, how, lag):
@@ -715,36 +701,17 @@ def _batch_range_join(spark, replay_dir, how, lag):
 
 @scenario
 def ss_left_join_flushes_after_watermark(spark, sf_dir, replay_dir, work):
-    from multi_threaded_mapreduce_framework_spark.streaming import (
-        stream_stream_left_join,
-    )
-
     lag, wm = "1 hour", "45 days"
     d = _own_replay(spark, sf_dir, work, "lj_replay")
-    joined = stream_stream_left_join(
+    joined = stream_stream_join(
         events_stream(spark, d).filter(F.col("event_type") == "click"),
         events_stream(spark, d).filter(F.col("event_type") == "purchase"),
+        "left_outer",
         max_lag=lag,
         watermark=wm,
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("cs_ssl")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        _write_sentinels(spark, d, days_ahead=0)
-        q.processAllAvailable()
-        _write_sentinels(spark, d, days_ahead=30)
-        q.processAllAvailable()
-        got = {
-            tuple(row)
-            for row in spark.table("cs_ssl").filter(F.col("l_user") >= 0).collect()
-        }
-    finally:
-        q.stop()
+    res = drain_to_convergence(joined, d, "cs_ssl")
+    got = {tuple(row) for row in res.filter(F.col("l_user") >= 0).collect()}
     batch = _batch_range_join(spark, d, "left_outer", lag)
     _check(got == batch, f"stream={len(got)} batch={len(batch)}")
     _check(any(row[3] is None for row in got), "no outer rows flushed")
@@ -763,25 +730,11 @@ def ss_funnel_chained_stateful_vs_batch(spark, sf_dir, replay_dir, work):
         max_lag=lag,
         watermark=wm,
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("cs_funnel")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        _write_sentinels(spark, d, days_ahead=0)
-        q.processAllAvailable()
-        _write_sentinels(spark, d, days_ahead=30)
-        q.processAllAvailable()
-        got = {
-            tuple(row)
-            for row in spark.table("cs_funnel").collect()
-            if not row.day.startswith("2025")  # sentinel windows
-        }
-    finally:
-        q.stop()
+    got = {
+        tuple(row)
+        for row in drain_to_convergence(agg, d, "cs_funnel").collect()
+        if not row.day.startswith("2025")  # sentinel windows
+    }
     ev = spark.read.parquet(d).filter(F.col("user_id") >= 0)
     batch = {
         (str(r.day), r.n)
@@ -804,23 +757,16 @@ def ss_funnel_chained_stateful_vs_batch(spark, sf_dir, replay_dir, work):
 @scenario
 def ss_inner_join_vs_batch(spark, sf_dir, replay_dir, work):
     lag, wm = "1 hour", "45 days"  # replay is hash-partitioned (see tests)
-    joined = stream_stream_inner_join(
+    joined = stream_stream_join(
         events_stream(spark, replay_dir).filter(F.col("event_type") == "click"),
         events_stream(spark, replay_dir).filter(F.col("event_type") == "purchase"),
+        "inner",
         max_lag=lag,
         watermark=wm,
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("cs_ssj")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.table("cs_ssj").collect()}
-    finally:
-        q.stop()
+    got = {
+        tuple(r) for r in run_to_convergence(joined, "cs_ssj", "append").collect()
+    }
     batch = _batch_range_join(spark, replay_dir, "inner", lag)
     _check(got == batch and len(got) > 0, f"stream={len(got)} batch={len(batch)}")
     return len(got)
@@ -832,38 +778,21 @@ def ss_full_join_flushes_both_sides(spark, sf_dir, replay_dir, work):
     null-flush once the watermark clears their windows — the left form
     (ss_left_join_flushes_after_watermark) can only see click-side
     flushes."""
-    from multi_threaded_mapreduce_framework_spark.streaming import (
-        stream_stream_full_join,
-    )
-
     lag, wm = "1 hour", "45 days"
     d = _own_replay(spark, sf_dir, work, "fj_replay")
-    joined = stream_stream_full_join(
+    joined = stream_stream_join(
         events_stream(spark, d).filter(F.col("event_type") == "click"),
         events_stream(spark, d).filter(F.col("event_type") == "purchase"),
+        "full_outer",
         max_lag=lag,
         watermark=wm,
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("cs_ssf")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        _write_sentinels(spark, d, days_ahead=0)
-        q.processAllAvailable()
-        _write_sentinels(spark, d, days_ahead=30)
-        q.processAllAvailable()
-        got = {
-            tuple(row)
-            for row in spark.table("cs_ssf")
-            .filter(F.coalesce(F.col("l_user"), F.col("r_user")) >= 0)
-            .collect()
-        }
-    finally:
-        q.stop()
+    got = {
+        tuple(row)
+        for row in drain_to_convergence(joined, d, "cs_ssf")
+        .filter(F.coalesce(F.col("l_user"), F.col("r_user")) >= 0)
+        .collect()
+    }
     batch = _batch_range_join(spark, d, "full_outer", lag)
     _check(got == batch, f"stream={len(got)} batch={len(batch)}")
     _check(any(row[3] is None for row in got), "no left-side outer rows")
@@ -879,30 +808,19 @@ def ss_semi_join_exactly_once(spark, sf_dir, replay_dir, work):
     as a COUNTED multiset)."""
     from collections import Counter
 
-    from multi_threaded_mapreduce_framework_spark.streaming import (
-        stream_stream_semi_join,
-    )
-
     lag, wm = "1 hour", "45 days"
-    joined = stream_stream_semi_join(
+    joined = stream_stream_join(
         events_stream(spark, replay_dir).filter(F.col("event_type") == "click"),
         events_stream(spark, replay_dir).filter(
             F.col("event_type") == "purchase"
         ),
+        "left_semi",
         max_lag=lag,
         watermark=wm,
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("cs_sss")
-        .start()
+    got = Counter(
+        tuple(r) for r in run_to_convergence(joined, "cs_sss", "append").collect()
     )
-    try:
-        q.processAllAvailable()
-        got = Counter(tuple(r) for r in spark.table("cs_sss").collect())
-    finally:
-        q.stop()
     ev = spark.read.parquet(replay_dir).filter(F.col("user_id") >= 0)
     l = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("l_user"),
@@ -1003,15 +921,10 @@ def update_changelog_emissions_per_batch(spark, sf_dir, replay_dir, work):
     no skipped update).  foreachBatch + update mode exposes the
     per-batch change feed with its batch_id, so the check is exact."""
     from multi_threaded_mapreduce_framework_spark.sources import load_table
-    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        _data_files,
-        bump_new_file_mtimes,
-    )
 
     rep = os.path.join(work, "upd_chlog_replay")
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     chunk_counts = []
-    seen: set[str] = set()
     for i in range(4):
         chunk = ev.filter(F.col("event_id") % 4 == i)
         chunk_counts.append(
@@ -1022,9 +935,7 @@ def update_changelog_emissions_per_batch(spark, sf_dir, replay_dir, work):
                 .collect()
             }
         )
-        chunk.coalesce(1).write.mode("append").parquet(rep)
-        bump_new_file_mtimes(rep, seen)
-        seen = set(_data_files(rep))
+        append_wave(rep, chunk.coalesce(1))
     agg = (
         events_stream(spark, rep)
         .groupBy("user_id")
@@ -1081,10 +992,6 @@ def session_window_recovery_across_restart(spark, sf_dir, replay_dir, work):
         SESSION_GAP_US,
     )
     from multi_threaded_mapreduce_framework_spark.sources import load_table
-    from multi_threaded_mapreduce_framework_spark.streaming.windowed import (
-        _data_files,
-        bump_new_file_mtimes,
-    )
 
     src = os.path.join(work, "swr_events")
     ckpt = os.path.join(work, "swr_ckpt")
@@ -1113,10 +1020,7 @@ def session_window_recovery_across_restart(spark, sf_dir, replay_dir, work):
         ev.filter(F.unix_micros("ts") <= boundary_us),
         ev.filter(F.unix_micros("ts") > boundary_us),
     )
-    seen: set[str] = set()
-
     def write_wave(df):
-        nonlocal seen
         tiled = df.join(
             df.selectExpr(
                 "ntile(2) OVER (ORDER BY ts, event_id) AS tile",
@@ -1126,11 +1030,8 @@ def session_window_recovery_across_restart(spark, sf_dir, replay_dir, work):
             ["ts", "event_id"],
         )
         for i in (1, 2):
-            tiled.filter(F.col("tile") == i).drop("tile").coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            bump_new_file_mtimes(src, seen)
-            seen = set(_data_files(src))
+            chunk = tiled.filter(F.col("tile") == i).drop("tile")
+            append_wave(src, chunk.coalesce(1))
 
     write_wave(halves[0])
     first_wave = spark.read.parquet(src).localCheckpoint()
@@ -1168,22 +1069,7 @@ def session_window_recovery_across_restart(spark, sf_dir, replay_dir, work):
     # finalizes, so it is provably absent from the sink)
     second_wave = halves[1]
     write_wave(second_wave)
-    vt = ev.schema["value"].dataType.simpleString()
-    sent = (
-        ev.orderBy(F.desc("ts"))
-        .limit(1)
-        .selectExpr(
-            "CAST(999999999 AS BIGINT) AS event_id",
-            "CAST(999999999 AS BIGINT) AS user_id",
-            "'click' AS event_type",
-            "ts + INTERVAL 30 DAYS AS ts",
-            f"CAST(0.0 AS {vt}) AS value",
-            "'{}' AS props",
-        )
-        .select(*ev.columns)
-    )
-    sent.coalesce(1).write.mode("append").parquet(src)
-    bump_new_file_mtimes(src, seen)
+    append_far_future_event(spark, src)
     # the boundary must split >=1 true session or the test proves nothing
     straddle = (
         first_wave.groupBy("user_id")

@@ -12,7 +12,6 @@ Usage: python tools/profile_query.py [--runs N] [--sf-dir DIR]
 from __future__ import annotations
 
 import argparse
-import gc
 import os
 import re
 import statistics
@@ -21,6 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import release_query_state
 from multi_threaded_mapreduce_framework_spark.queries import all_queries
 from multi_threaded_mapreduce_framework_spark.session import get_spark
 
@@ -70,12 +70,7 @@ def main() -> None:
             a_times.append(t2 - t1)
             t_times.append(t2 - t0)
         del df
-        gc.collect()
-        spark.catalog.clearCache()
-        try:
-            spark._jvm.System.gc()  # free dead checkpoint blocks (bench.py note)
-        except Exception:  # noqa: BLE001
-            pass
+        release_query_state(spark)
         print(
             f"{name}  total={statistics.median(t_times):.3f}s "
             f"builder={statistics.median(b_times):.3f}s "
