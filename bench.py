@@ -77,27 +77,32 @@ def release_query_state(spark) -> None:
         pass
 
 
+def timed_run(spark, build, sf_dir: str) -> tuple[float, float]:
+    """One run of ``build(spark, sf_dir)`` and its action, timed apart:
+    ``(builder_s, action_s)``.
+
+    The action is a write to the noop sink: it evaluates every output
+    column without driver-side materialization.  count() — the
+    previous action — lets Catalyst ELIMINATE the right side of a final
+    left join whose key is provably unique (count needs no columns), so
+    queries ending in census LEFT JOIN detail (q205/q210/q212) benched
+    a pruned plan: q205 at 2M docs read 0.7 s under count() vs 37 s for
+    the real result.  noop forces the honest plan for every query; for
+    aggregate-final queries the two actions measure identically."""
+    t0 = time.time()
+    df = build(spark, sf_dir)
+    t1 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.time() - t1
+
+
 def time_query(spark, q, sf_dir: str, runs: int) -> float:
     """Median wall-clock of `runs` warm executions (1 untimed warm-up)."""
     samples = []
     for i in range(runs + 1):
-        t0 = time.time()
-        df = q.builder(spark, sf_dir)
-        # Force COMPLETE execution with the noop sink: it evaluates
-        # every output column without driver-side materialization.
-        # count() — the previous action — lets Catalyst ELIMINATE the
-        # right side of a final left join whose key is provably unique
-        # (count needs no columns), so queries ending in
-        # census LEFT JOIN detail (q205/q210/q212) benched a pruned
-        # plan: q205 at 2M docs read 0.7 s under count() vs 37 s for
-        # the real result.  noop forces the honest plan for every
-        # query; for aggregate-final queries the two actions measure
-        # identically.
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
+        builder_s, action_s = timed_run(spark, q.builder, sf_dir)
         if i > 0:  # skip warm-up sample
-            samples.append(dt)
-    del df
+            samples.append(builder_s + action_s)
     release_query_state(spark)
     return statistics.median(samples)
 

@@ -5,18 +5,15 @@ opaque ``binary`` payload column plus typed metadata, processed with
 Arrow-batched ``mapInPandas`` so payload bytes never take the
 row-at-a-time Python path.
 
-Decode paths come in three tiers:
-
-- REAL, codec-free: WAV audio (:func:`decode_audio` parses genuine
-  RIFF/PCM payloads with stdlib ``wave`` + numpy) and P6 PPM images
-  (:func:`decode_images` parses the raw-RGB format directly). These run
-  end-to-end on real bytes in any environment.
-- REAL, codec-gated: JPEG/PNG (PIL), video frames (pyav) — gated by
-  :func:`_require_codec`; this container has neither, so these raise
-  the documented stub error unless ``fake=True``.
-- FAKE: deterministic header/sha256 kernels used by tests so the
-  Spark-side plumbing (schema, batch shape, partitioning, UDF
-  signatures) stays verified even where the codec tier is absent.
+Every kernel decodes real bytes with no codec library, so each runs
+end to end in any environment: WAV audio through stdlib ``wave`` and
+numpy, P6 PPM and PNG images through :func:`_parse_image` (the raw-RGB
+format read directly; PNG through stdlib ``zlib``), and raw video as a
+concatenated-P6 stream (ffmpeg ``image2pipe``'s ppm format).  The
+container is read from the payload's magic bytes, never from the
+metadata; a payload in any other container raises ``ValueError``.  A
+row whose payload is null carries no media, so no kernel emits a row
+for it.
 
 Schema convention::
 
@@ -34,13 +31,11 @@ when metadata-only queries run), and every kernel is a mapInPandas pass
 
 from __future__ import annotations
 
-import hashlib
-import struct
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -51,46 +46,14 @@ MEDIA_SCHEMA = (
     "duration_ms:int, sample_rate:int>"
 )
 
-FEATURE_DIM = 8
 
-
-def _require_codec(name: str):
-    """Gate on a real media library; raise the documented stub error.
-
-    Production deployments install the codec (PIL / torchaudio / pyav)
-    on executors and this resolves; this container has none, so
-    operators fall back to the deterministic fake kernels below when
-    ``fake=True`` and raise otherwise.
-    """
-    try:
-        module = __import__(name)
-        return module
-    except ImportError as e:
-        raise NotImplementedError(
-            f"media codec '{name}' not available in this environment; "
-            "run with fake=True for the deterministic stub kernel"
-        ) from e
-
-
-def synthesize_media(spark: SparkSession, n: int = 64, parts: int = 4) -> DataFrame:
-    """Deterministic fake media table (payload = seeded pseudo-bytes with
-    the declared width/height packed into the header) — the stand-in for
-    ``spark.read.format('binaryFile')`` over a real media lake."""
-    rows = []
-    for i in range(n):
-        kind = ("image", "audio", "video")[i % 3]
-        w, h = 16 + (i % 5) * 8, 16 + (i % 3) * 8
-        body = hashlib.sha256(f"media-{i}".encode()).digest() * 4
-        payload = struct.pack("<ii", w, h) + body
-        rows.append(
-            (
-                i,
-                kind,
-                bytearray(payload),
-                (w, h, "fake", 1000 + i * 10, 16_000),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(parts)
+def _payload_rows(df: DataFrame, kind: str | None = None) -> DataFrame:
+    """The rows a kernel reads: those with a payload, of ``kind`` when
+    one is given.  A null payload is a row with no media."""
+    has_payload = F.col("payload").isNotNull()
+    if kind is None:
+        return df.filter(has_payload)
+    return df.filter((F.col("kind") == kind) & has_payload)
 
 
 def _parse_ppm_at(raw: bytes, start: int = 0):
@@ -131,17 +94,10 @@ def _parse_ppm(raw: bytes):
     """Real P6 PPM parse -> (width, height, HxWx3 uint8 pixel array).
 
     P6 is raw 8-bit RGB behind an ASCII header — a genuine on-disk image
-    format decodable without any codec library, which makes it the
-    container-portable real path (PIL handles it too, identically).
+    format decodable without any codec library.
     """
     w, h, px, _ = _parse_ppm_at(raw, 0)
     return w, h, px
-
-
-def _decode_ppm(raw: bytes) -> tuple[int, int, float]:
-    """Real P6 PPM decode: (width, height, mean pixel intensity)."""
-    w, h, px = _parse_ppm(raw)
-    return w, h, float(px.mean())
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -164,10 +120,10 @@ def _parse_png(raw: bytes):
     only stdlib zlib + numpy — no codec library.
 
     Supports the mainline still-image profile: 8-bit depth, color types
-    0 (gray), 2 (RGB), 6 (RGBA, alpha dropped — the same thing PIL's
-    ``convert('RGB')`` does), all five scanline filters, no interlace.
+    0 (gray), 2 (RGB), 6 (RGBA, alpha dropped), all five scanline
+    filters, no interlace.
     Anything else (16-bit, palette, Adam7) raises ValueError rather
-    than misdecoding; those payloads take the PIL tier.
+    than misdecoding.
     """
     import struct as _struct
     import zlib
@@ -228,8 +184,7 @@ def _parse_png(raw: bytes):
         elif ftype == 2:  # Up — vectorized, uint8 addition wraps mod 256
             cur += prev
         elif ftype in (1, 3, 4):  # Sub/Average/Paeth carry a left
-            # dependency, so reconstruct serially (test-scale payloads;
-            # the production tier for big rasters is the codec path)
+            # dependency, so reconstruct serially
             for x in range(stride):
                 a = int(cur[x - bpp]) if x >= bpp else 0
                 b = int(prev[x])
@@ -253,10 +208,16 @@ def _parse_png(raw: bytes):
     return w, h, px
 
 
-def _decode_png(raw: bytes) -> tuple[int, int, float]:
-    """Real PNG decode: (width, height, mean over raw RGB bytes)."""
-    w, h, px = _parse_png(raw)
-    return w, h, float(px.mean())
+def _parse_image(raw: bytes):
+    """Real image parse -> (format, width, height, HxWx3 uint8 pixel
+    array), the container read from the magic bytes: ``'ppm'`` for P6,
+    ``'png'`` for the PNG signature.  Any other container raises
+    ValueError."""
+    if raw.startswith(b"P6"):
+        return ("ppm", *_parse_ppm(raw))
+    if raw.startswith(_PNG_SIG):
+        return ("png", *_parse_png(raw))
+    raise ValueError("unknown media container: not a P6 PPM or PNG image")
 
 
 def encode_png(px, filters=None) -> bytes:
@@ -328,18 +289,14 @@ def encode_png(px, filters=None) -> bytes:
     )
 
 
-def decode_images(df: DataFrame, fake: bool = True) -> DataFrame:
+def decode_images(df: DataFrame) -> DataFrame:
     """Decode image payloads -> (media_id, width, height, mean_intensity).
 
-    Real path (``fake=False``): P6 PPM payloads are decoded directly
-    (:func:`_decode_ppm`) and PNG payloads by the stdlib zlib parser
-    (:func:`_decode_png`) — real bytes, no codec needed for either;
-    any other format requires PIL on the executors. ``mean_intensity`` is the
-    unweighted mean over raw RGB channel bytes under BOTH decode paths
-    (the schema contract — never a luma-weighted grayscale mean). Stub path: header-packed dims
-    + byte-mean as 'intensity' — deterministic, so tests can assert
-    exact values while exercising the identical mapInPandas batch shape
-    the real kernel uses.
+    P6 PPM and PNG payloads are parsed by :func:`_parse_image` from the
+    bytes alone.  ``mean_intensity`` is the unweighted mean over the raw
+    RGB channel bytes (the schema contract — never a luma-weighted
+    grayscale mean), so one image encoded in either container scores
+    the same.
     """
 
     def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -348,82 +305,22 @@ def decode_images(df: DataFrame, fake: bool = True) -> DataFrame:
         for pdf in batches:
             out = {"media_id": [], "width": [], "height": [], "mean_intensity": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                if fake:
-                    w, h = struct.unpack_from("<ii", raw, 0)
-                    body = raw[8:]
-                    mean = round(sum(body) / len(body), 2)
-                elif raw.startswith(b"P6"):
-                    w, h, mean = _decode_ppm(raw)
-                    mean = round(mean, 2)
-                elif raw.startswith(_PNG_SIG):
-                    w, h, mean = _decode_png(raw)
-                    mean = round(mean, 2)
-                else:
-                    from io import BytesIO
-
-                    import numpy as np
-
-                    pil_image = _require_codec("PIL.Image").Image
-                    with pil_image.open(BytesIO(raw)) as im:
-                        w, h = im.size
-                        # schema contract: mean_intensity = mean over raw
-                        # RGB channel bytes — identical definition to the
-                        # PPM fast path (NOT luma-weighted grayscale), so
-                        # the same image encoded two ways scores the same
-                        mean = round(
-                            float(np.asarray(im.convert("RGB"), dtype=np.uint8).mean()),
-                            2,
-                        )
+                _, w, h, px = _parse_image(bytes(payload))
                 out["media_id"].append(mid)
                 out["width"].append(w)
                 out["height"].append(h)
-                out["mean_intensity"].append(mean)
+                out["mean_intensity"].append(round(float(px.mean()), 2))
             yield pd.DataFrame(out)
 
-    return df.filter(F.col("kind") == "image").mapInPandas(
+    return _payload_rows(df, "image").mapInPandas(
         kernel, schema="media_id bigint, width int, height int, mean_intensity double"
     )
-
-
-def synthesize_ppm_media(spark: SparkSession, n: int = 12, parts: int = 4) -> DataFrame:
-    """Media table whose payloads are GENUINE P6 PPM images: row i is a
-    (8+i) x (6+i) RGB ramp where pixel byte k has value (i + k) % 256.
-    Real decodable bytes — :func:`decode_images` with ``fake=False``
-    must recover the dims and the exact ramp mean from the payload."""
-    rows = []
-    for i in range(n):
-        w, h = 8 + i, 6 + i
-        header = f"P6\n# ramp {i}\n{w} {h}\n255\n".encode()
-        body = bytes((i + k) % 256 for k in range(w * h * 3))
-        rows.append((i, "image", bytearray(header + body), (w, h, "ppm", 0, 0)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(parts)
-
-
-def synthesize_png_media(spark: SparkSession, n: int = 10, parts: int = 4) -> DataFrame:
-    """Media table whose payloads are GENUINE PNG images (zlib IDAT,
-    CRC'd chunks): row i is a (8+i) x (6+i) RGB ramp where pixel byte k
-    has value (i + k) % 256 — the SAME pixel law as
-    :func:`synthesize_ppm_media`, so the two real decode paths must
-    agree bit-for-bit on dims and mean. Row i uses scanline filter
-    i % 5, so a full table exercises every PNG unfilter branch."""
-    import numpy as np
-
-    rows = []
-    for i in range(n):
-        w, h = 8 + i, 6 + i
-        px = np.array(
-            [(i + k) % 256 for k in range(w * h * 3)], dtype=np.uint8
-        ).reshape(h, w, 3)
-        payload = encode_png(px, filters=[(i + y) % 5 for y in range(h)])
-        rows.append((i, "image", bytearray(payload), (w, h, "png", 0, 0)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(parts)
 
 
 def wav_sine_bytes(freq: float, duration_ms: int, sample_rate: int = 8_000) -> bytes:
     """GENUINE WAV bytes (RIFF header + 16-bit PCM mono, stdlib
     ``wave``) for a 0.5-amplitude sine — the single WAV-generation law
-    shared by :func:`synthesize_wav_media` and the q171 declared query.
+    shared by the q171 and q247 declared queries.
     Vectorized: samples come from one numpy expression (``np.trunc``
     matches python ``int()``'s toward-zero truncation)."""
     import io
@@ -446,44 +343,14 @@ def wav_sine_bytes(freq: float, duration_ms: int, sample_rate: int = 8_000) -> b
     return buf.getvalue()
 
 
-def synthesize_wav_media(
-    spark: SparkSession,
-    n: int = 16,
-    sample_rate: int = 8_000,
-    parts: int = 4,
-) -> DataFrame:
-    """Media table whose payloads are GENUINE WAV files (RIFF header +
-    16-bit PCM mono written by stdlib ``wave``): row i is a
-    (220 + 55*i) Hz sine of (200 + 50*i) ms at amplitude 0.5. Real
-    bytes end to end — :func:`decode_audio` must recover the declared
-    duration/rate and the sine's RMS (0.5/sqrt(2)) from the payload
-    alone."""
-    rows = []
-    for i in range(n):
-        duration_ms = 200 + 50 * i
-        freq = 220.0 + 55.0 * i
-        rows.append(
-            (
-                i,
-                "audio",
-                bytearray(wav_sine_bytes(freq, duration_ms, sample_rate)),
-                (0, 0, "wav", duration_ms, sample_rate),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(parts)
-
-
-def decode_audio(df: DataFrame, fake: bool = False) -> DataFrame:
+def decode_audio(df: DataFrame) -> DataFrame:
     """Decode audio payloads -> (media_id, sample_rate, duration_ms,
     rms, peak).
 
-    REAL path by default: stdlib ``wave`` parses the RIFF container and
-    numpy computes RMS/peak over the PCM samples (normalized to
-    [-1, 1]) — no codec library involved, so this is a genuine
-    bytes-to-features kernel in any environment. Compressed codecs
-    (mp3/ogg) would gate on torchaudio in the same kernel. Fake path:
-    metadata passthrough with sha256-derived pseudo-levels, for
-    plumbing tests that don't construct real WAV bytes.
+    Stdlib ``wave`` parses the RIFF container and numpy computes
+    RMS/peak over the PCM samples (normalized to [-1, 1]) — no codec
+    library involved, so this is a genuine bytes-to-features kernel in
+    any environment.
     """
 
     def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -501,25 +368,16 @@ def decode_audio(df: DataFrame, fake: bool = False) -> DataFrame:
                 "rms": [],
                 "peak": [],
             }
-            for mid, payload, meta in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"]
-            ):
-                if fake:
-                    digest = hashlib.sha256(bytes(payload)).digest()
-                    rate = int(meta["sample_rate"])
-                    dur = int(meta["duration_ms"])
-                    rms = round(digest[0] / 512, 6)
-                    peak = round(digest[1] / 256, 6)
-                else:
-                    with wave_mod.open(io.BytesIO(bytes(payload)), "rb") as w:
-                        rate = w.getframerate()
-                        n_frames = w.getnframes()
-                        dur = int(round(1000 * n_frames / rate))
-                        pcm = np.frombuffer(
-                            w.readframes(n_frames), dtype=np.int16
-                        ).astype(np.float64) / 32768.0
-                    rms = round(float(np.sqrt((pcm * pcm).mean())), 6) if len(pcm) else 0.0
-                    peak = round(float(np.abs(pcm).max()), 6) if len(pcm) else 0.0
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                with wave_mod.open(io.BytesIO(bytes(payload)), "rb") as w:
+                    rate = w.getframerate()
+                    n_frames = w.getnframes()
+                    dur = int(round(1000 * n_frames / rate))
+                    pcm = np.frombuffer(
+                        w.readframes(n_frames), dtype=np.int16
+                    ).astype(np.float64) / 32768.0
+                rms = round(float(np.sqrt((pcm * pcm).mean())), 6) if len(pcm) else 0.0
+                peak = round(float(np.abs(pcm).max()), 6) if len(pcm) else 0.0
                 out["media_id"].append(mid)
                 out["sample_rate"].append(rate)
                 out["duration_ms"].append(dur)
@@ -527,45 +385,17 @@ def decode_audio(df: DataFrame, fake: bool = False) -> DataFrame:
                 out["peak"].append(peak)
             yield pd.DataFrame(out)
 
-    return df.filter(F.col("kind") == "audio").mapInPandas(
+    return _payload_rows(df, "audio").mapInPandas(
         kernel,
         schema="media_id bigint, sample_rate int, duration_ms int, rms double, peak double",
     )
 
 
-def extract_features(df: DataFrame, dim: int = FEATURE_DIM, fake: bool = True) -> DataFrame:
-    """Payload -> fixed-dim float feature vector (the embed step of a
-    multimodal pipeline). Stub kernel: sha256-seeded deterministic
-    pseudo-floats in [0, 1); real kernel: a model forward pass over the
-    decoded tensor (same signature, same output schema)."""
-    if not fake:
-        _require_codec("torch")
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, feats = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                digest = hashlib.sha256(bytes(payload)).digest()
-                vec = [
-                    round(int.from_bytes(digest[4 * j : 4 * j + 4], "little") / 2**32, 6)
-                    for j in range(dim)
-                ]
-                ids.append(mid)
-                feats.append(vec)
-            yield pd.DataFrame({"media_id": ids, "feature": feats})
-
-    return df.mapInPandas(kernel, schema="media_id bigint, feature array<float>")
-
-
-def resize_images(df: DataFrame, width: int, height: int, fake: bool = True) -> DataFrame:
-    """Resize kernel. Stub path re-packs the header with the target dims
-    (payload body untouched). Real path: P6 PPM and PNG payloads are
-    resized IN-CONTAINER with a codec-free nearest-neighbor resample
-    (numpy index mapping over the raw RGB grid, re-emitted as valid
-    bytes in the SAME format — `decode_images(fake=False)` reads the
-    output); other formats gate on PIL."""
+def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
+    """Resize kernel: P6 PPM and PNG payloads are resized IN-CONTAINER
+    with a codec-free nearest-neighbor resample (numpy index mapping
+    over the raw RGB grid, re-emitted as valid bytes in the SAME
+    format — :func:`decode_images` reads the output)."""
 
     def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import numpy as np
@@ -586,31 +416,17 @@ def resize_images(df: DataFrame, width: int, height: int, fake: bool = True) -> 
         for pdf in batches:
             ids, payloads = [], []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                if fake:
-                    out = struct.pack("<ii", width, height) + raw[8:]
-                elif raw.startswith(b"P6"):
-                    w, h, px = _parse_ppm(raw)
-                    out = (
-                        b"P6\n%d %d\n255\n" % (width, height)
-                        + nn_resample(px, w, h).tobytes()
-                    )
-                elif raw.startswith(_PNG_SIG):
-                    w, h, px = _parse_png(raw)
-                    out = encode_png(nn_resample(px, w, h))
+                fmt, w, h, px = _parse_image(bytes(payload))
+                small = nn_resample(px, w, h)
+                if fmt == "ppm":
+                    out = b"P6\n%d %d\n255\n" % (width, height) + small.tobytes()
                 else:
-                    from io import BytesIO
-
-                    pil_image = _require_codec("PIL.Image").Image
-                    with pil_image.open(BytesIO(raw)) as im:
-                        buf = BytesIO()
-                        im.resize((width, height)).save(buf, format=im.format)
-                        out = buf.getvalue()
+                    out = encode_png(small)
                 ids.append(mid)
                 payloads.append(out)
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
-    return df.filter(F.col("kind") == "image").mapInPandas(
+    return _payload_rows(df, "image").mapInPandas(
         kernel, schema="media_id bigint, payload binary"
     )
 
@@ -659,10 +475,8 @@ def sample_frame_features(df: DataFrame, every_ms: int = 500) -> DataFrame:
     pick the frame covering each ``every_ms`` grid instant
     (``_pick_frame``), and decode ONLY the
     sampled frames — one output row per sampled frame with its raw-RGB
-    mean intensity.  This is the genuine bytes-to-frames kernel of the
-    video tier (``sample_frames`` below is the metadata-driven stub /
-    pyav-gated codec form): a flatMap-shaped mapInPandas pass, rows
-    out > rows in, payloads never leave the kernel."""
+    mean intensity.  A flatMap-shaped mapInPandas pass: rows out >
+    rows in, payloads never leave the kernel."""
 
     def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import numpy as np
@@ -700,38 +514,12 @@ def sample_frame_features(df: DataFrame, every_ms: int = 500) -> DataFrame:
                     out["mean_intensity"].append(round(float(px.mean()), 2))
             yield pd.DataFrame(out)
 
-    return df.filter(F.col("kind") == "video").mapInPandas(
+    return _payload_rows(df, "video").mapInPandas(
         kernel,
         schema=(
             "media_id bigint, frame_idx int, frame_ts_ms int,"
             " width int, height int, mean_intensity double"
         ),
-    )
-
-
-def sample_frames(df: DataFrame, every_ms: int = 500, fake: bool = True) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame
-    (media_id, frame_idx, frame_ts_ms) — a flatMap-shaped kernel (rows
-    out > rows in), driven by the metadata duration. Stub path emits
-    frame stubs; real path decodes frames with pyav."""
-    if not fake:
-        _require_codec("av")
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "frame_ts_ms": []}
-            for mid, meta in zip(pdf["media_id"], pdf["meta"]):
-                duration = int(meta["duration_ms"])
-                for k, ts in enumerate(range(0, duration, every_ms)):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(k)
-                    out["frame_ts_ms"].append(ts)
-            yield pd.DataFrame(out)
-
-    return df.filter(F.col("kind") == "video").mapInPandas(
-        kernel, schema="media_id bigint, frame_idx int, frame_ts_ms int"
     )
 
 
@@ -783,7 +571,7 @@ def extract_frames(df: DataFrame, every_ms: int = 500) -> DataFrame:
                     out["payload"].append(raw[offsets[f] : ends[f]])
             yield pd.DataFrame(out)
 
-    return df.filter(F.col("kind") == "video").mapInPandas(
+    return _payload_rows(df, "video").mapInPandas(
         kernel,
         schema=(
             "media_id bigint, frame_idx int, frame_ts_ms int,"
@@ -801,8 +589,8 @@ def media_census(df: DataFrame) -> DataFrame:
     exact math and therefore oracle-checkable: container format is
     recovered from the MAGIC BYTES (RIFF / ``P6`` / PNG signature,
     never the metadata column), images yield (width, height,
-    pix_bytes = 3wh, pix_sum = sum of the raw RGB bytes) through the
-    REAL ``_parse_ppm`` / ``_parse_png`` kernels, and audio yields
+    pix_bytes = 3wh, pix_sum = sum of the raw RGB bytes) through
+    :func:`_parse_image`, and audio yields
     (n_samples, duration_ms) through stdlib ``wave``.  ``byte_len`` is
     the on-disk payload size (codec-dependent for PNG — q247 excludes
     it there by declared law).
@@ -842,25 +630,15 @@ def media_census(df: DataFrame) -> DataFrame:
                         (int(mid), "wav", 0, 0, 0, 0, n,
                          1000 * n // rate, len(raw))
                     )
-                elif raw.startswith(b"P6"):
-                    w_, h_, px = _parse_ppm(raw)
-                    rows.append(
-                        (int(mid), "ppm", w_, h_, px.size,
-                         int(px.sum(dtype=np.int64)), 0, 0, len(raw))
-                    )
-                elif raw.startswith(_PNG_SIG):
-                    w_, h_, px = _parse_png(raw)
-                    rows.append(
-                        (int(mid), "png", w_, h_, px.size,
-                         int(px.sum(dtype=np.int64)), 0, 0, len(raw))
-                    )
                 else:
-                    raise ValueError(
-                        f"unknown media container for media_id={mid}"
+                    fmt, w_, h_, px = _parse_image(raw)
+                    rows.append(
+                        (int(mid), fmt, w_, h_, px.size,
+                         int(px.sum(dtype=np.int64)), 0, 0, len(raw))
                     )
             yield pd.DataFrame(rows, columns=cols)
 
-    return df.mapInPandas(
+    return _payload_rows(df).mapInPandas(
         kernel,
         schema=(
             "media_id bigint, format string, width bigint, height bigint,"

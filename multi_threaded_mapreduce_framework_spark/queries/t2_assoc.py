@@ -7,15 +7,15 @@ irregular event streams.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
-from multi_threaded_mapreduce_framework_spark.sources import layout_tag, load_table
-from multi_threaded_mapreduce_framework_spark.sources.memo import session_state
+from multi_threaded_mapreduce_framework_spark.sources import load_table
+from multi_threaded_mapreduce_framework_spark.sources.memo import (
+    fresh_state_dir,
+    session_state,
+)
 
 
 def build_copurchase_pair_counts(spark, sf_dir: str):
@@ -191,8 +191,9 @@ def q144_incremental_agg_merge(spark, sf_dir):
     works because count/sum are algebraic (mergeable); avg is derived
     from the merged state, never averaged across batches.  The oracle
     recomputes from all events, proving merge == full recompute."""
-    tag = layout_tag(spark, sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "mtmrf_layout", tag, "agg_state")
+    # a fresh directory per build: a relation built earlier in the
+    # session still reads its own partials
+    base = fresh_state_dir(spark, sf_dir, "agg_state")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",

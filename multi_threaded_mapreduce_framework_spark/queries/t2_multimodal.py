@@ -22,6 +22,18 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
+    MEDIA_SCHEMA,
+    decode_audio,
+    decode_images,
+    encode_png,
+    extract_frames,
+    media_census,
+    ppm_stream_bytes,
+    resize_images,
+    sample_frame_features,
+    wav_sine_bytes,
+)
 from multi_threaded_mapreduce_framework_spark.queries.registry import register
 from multi_threaded_mapreduce_framework_spark.sources import (
     load_table,
@@ -69,6 +81,84 @@ def _spread_chain(df):
     return spread_small_scan(df, target=n)
 
 
+def _wav_payload(d: int) -> tuple[bytes, dict]:
+    """Doc ``d``'s audio (q171, q247) and its meta: a genuine WAV of a
+    ``220 + 55*(d%16)`` Hz sine lasting ``100 + 25*(d%32)`` ms at
+    8 kHz."""
+    duration_ms = 100 + (d % 32) * 25
+    freq = 220.0 + float(d % 16) * 55.0
+    meta = {
+        "width": 0,
+        "height": 0,
+        "format": "wav",
+        "duration_ms": duration_ms,
+        "sample_rate": 8_000,
+    }
+    return wav_sine_bytes(freq, duration_ms, 8_000), meta
+
+
+def _image_payload(d: int) -> tuple[bytes, dict]:
+    """Doc ``d``'s image (q172, q247, q267) and its meta: pixel byte k
+    is ``(d + k) % 256`` on an ``(8 + d%8) x (6 + d%5)`` RGB grid,
+    encoded as P6 PPM for even ``d`` and as zlib PNG for odd ``d``."""
+    import numpy as np
+
+    w, h = 8 + d % 8, 6 + d % 5
+    px = ((np.arange(w * h * 3, dtype=np.int64) + d) % 256).astype(np.uint8)
+    if d % 2:
+        payload, fmt = encode_png(px.reshape(h, w, 3)), "png"
+    else:
+        payload, fmt = b"P6\n%d %d\n255\n" % (w, h) + px.tobytes(), "ppm"
+    meta = {"width": w, "height": h, "format": fmt, "duration_ms": 0, "sample_rate": 0}
+    return payload, meta
+
+
+def _video_payload(d: int) -> tuple[bytes, dict]:
+    """Doc ``d``'s video (q173, q271) and its meta: a concatenated-P6
+    stream (ffmpeg image2pipe's ppm format) of ``2 + d%4`` frames on an
+    ``(8 + d%5) x (6 + d%3)`` RGB grid at 4 fps, frame f pixel byte k
+    being ``(d + 7*f + k) % 256``."""
+    import numpy as np
+
+    w, h, n_frames = 8 + d % 5, 6 + d % 3, 2 + d % 4
+    frames = [
+        ((np.arange(w * h * 3, dtype=np.int64) + d + 7 * f) % 256)
+        .astype(np.uint8)
+        .reshape(h, w, 3)
+        for f in range(n_frames)
+    ]
+    meta = {
+        "width": w,
+        "height": h,
+        "format": "ppm-stream",
+        "duration_ms": n_frames * 250,  # 4 fps
+        "sample_rate": 0,
+    }
+    return ppm_stream_bytes(frames), meta
+
+
+def _synthesize(doc_ids, kind: str, law):
+    """One ``kind`` media row per ``doc_id`` row, its payload and meta
+    from ``law(doc_id)``, synthesized ON THE EXECUTORS in one
+    ``mapInPandas`` pass."""
+
+    def synth(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [law(int(d)) for d in pdf["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["doc_id"],
+                    "kind": [kind] * len(pdf),
+                    "payload": [payload for payload, _ in rows],
+                    "meta": [meta for _, meta in rows],
+                }
+            )
+
+    return doc_ids.mapInPandas(synth, schema=MEDIA_SCHEMA)
+
+
 @register(
     "q171_multimodal_audio",
     tier="T2",
@@ -91,58 +181,14 @@ def q171_multimodal_audio(spark, sf_dir):
     the language rollup.  This is the shape a real 100 TB media
     pipeline has: bytes stay columnar on executors, metadata-only
     queries never read them (column pruning), features aggregate."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        decode_audio,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-
-    def synth(batches):
-        import pandas as pd
-
-        from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-            wav_sine_bytes,
-        )
-
-        sample_rate = 8_000
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf["doc_id"]:
-                duration_ms = 100 + int(did % 32) * 25
-                freq = 220.0 + float(did % 16) * 55.0
-                payloads.append(wav_sine_bytes(freq, duration_ms, sample_rate))
-                metas.append(
-                    {
-                        "width": 0,
-                        "height": 0,
-                        "format": "wav",
-                        "duration_ms": duration_ms,
-                        "sample_rate": sample_rate,
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["audio"] * len(pdf),
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
     # spread the 1-split doc scan BEFORE synthesis (guide §2.5 input
     # parallelism): the fixture is a single-row-group file, so without
     # this the whole synth+decode Python pipeline runs in ONE task; the
     # repartition moves only (doc_id) rows — payloads are born after it
     # and still never cross a shuffle (plan-asserted)
-    media = spread_small_scan(docs.select("doc_id")).mapInPandas(
-        synth,
-        schema=(
-            "media_id bigint, kind string, payload binary,"
-            " meta struct<width:int, height:int, format:string,"
-            " duration_ms:int, sample_rate:int>"
-        ),
-    )
-    feats = decode_audio(media, fake=False)
+    media = _synthesize(spread_small_scan(docs.select("doc_id")), "audio", _wav_payload)
+    feats = decode_audio(media)
     return (
         feats.join(
             docs.withColumnRenamed("doc_id", "media_id"), "media_id"
@@ -159,64 +205,13 @@ def q171_multimodal_audio(spark, sf_dir):
 def _image_media(docs):
     """The declared image corpus, shared VERBATIM by q172 (float
     intensity tier, rows-only) and q267 (integer resize-census tier,
-    hash-gated) so the two rows audit the same payloads — the same
-    single-source-of-law discipline as ``_video_media`` below: doc d
-    gets a GENUINE image payload synthesized ON THE EXECUTORS (even
-    doc_id -> P6 PPM, odd -> zlib/Paeth PNG; pixel byte k is
-    ``(d + k) % 256`` on an ``(8 + d%8) x (6 + d%5)`` RGB grid)."""
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-            encode_png,
-        )
-
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 8 + d % 8, 6 + d % 5
-                px = ((np.arange(w * h * 3, dtype=np.int64) + d) % 256).astype(
-                    np.uint8
-                )
-                if d % 2:
-                    payload = encode_png(px.reshape(h, w, 3))
-                    fmt = "png"
-                else:
-                    payload = b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
-                    fmt = "ppm"
-                payloads.append(payload)
-                metas.append(
-                    {
-                        "width": w,
-                        "height": h,
-                        "format": fmt,
-                        "duration_ms": 0,
-                        "sample_rate": 0,
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["image"] * len(pdf),
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
+    hash-gated) so the two rows audit the same payloads: doc d gets
+    :func:`_image_payload`'s GENUINE image, synthesized ON THE
+    EXECUTORS."""
     # chain-spread the 1-split doc scan before synthesis (see
     # _spread_chain: 3-kernel pipelines want cores/4 fan-out; only
     # doc_id rows cross the exchange; payload locality unchanged)
-    return _spread_chain(docs.select("doc_id")).mapInPandas(
-        synth,
-        schema=(
-            "media_id bigint, kind string, payload binary,"
-            " meta struct<width:int, height:int, format:string,"
-            " duration_ms:int, sample_rate:int>"
-        ),
-    )
+    return _synthesize(_spread_chain(docs.select("doc_id")), "image", _image_payload)
 
 
 @register(
@@ -232,10 +227,10 @@ def q172_multimodal_image(spark, sf_dir):
     both carry the same deterministic ramp law: pixel byte k of doc d
     is ``(d + k) % 256`` on a ``(8 + d%8) x (6 + d%5)`` RGB grid), the
     real nearest-neighbor resize (``operators/multimodal.py::
-    resize_images(fake=False)``) re-encodes every payload to 12x10 in
-    its SAME format, the real parse kernels (``_parse_ppm`` /
-    ``_parse_png``) recover dims + mean RGB intensity from the resized
-    bytes alone, and the features roll up per (lang, format).
+    resize_images``) re-encodes every payload to 12x10 in its SAME
+    format, the real parse kernel (``_parse_image``) recovers dims +
+    mean RGB intensity from the resized bytes alone, and the features
+    roll up per (lang, format).
 
     Driver contract: rows-only (binary decode has no SQL oracle);
     value-level checks — exact per-doc intensity against an
@@ -252,17 +247,12 @@ def q172_multimodal_image(spark, sf_dir):
     ``max_h`` pin, through the aggregate, that every payload really
     was resized on the bytes (post-resize dims are read from the
     re-encoded raster, not metadata)."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        decode_images,
-        resize_images,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     media = _image_media(docs)
-    resized = resize_images(media, width=12, height=10, fake=False).withColumn(
+    resized = resize_images(media, width=12, height=10).withColumn(
         "kind", F.lit("image")
     )
-    feats = decode_images(resized, fake=False)
+    feats = decode_images(resized)
     return (
         feats.join(docs.withColumnRenamed("doc_id", "media_id"), "media_id")
         .withColumn(
@@ -285,61 +275,13 @@ def _video_media(docs):
     """The declared video corpus, shared VERBATIM by q173 (float
     feature tier, rows-only) and q271 (integer census tier,
     hash-gated) so the two rows audit the same payloads — the
-    q171/q247 and q172/q267 pairing pattern: doc d gets a GENUINE
-    concatenated-P6 stream (ffmpeg image2pipe's ppm format) of
-    ``2 + d%4`` frames on an ``(8 + d%5) x (6 + d%3)`` RGB grid at
-    4 fps, frame f pixel byte k being ``(d + 7*f + k) % 256``;
+    q171/q247 and q172/q267 pairing pattern: doc d gets
+    :func:`_video_payload`'s GENUINE concatenated-P6 stream,
     synthesized ON THE EXECUTORS inside the scan stage."""
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-            ppm_stream_bytes,
-        )
-
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h, n_frames = 8 + d % 5, 6 + d % 3, 2 + d % 4
-                frames = [
-                    ((np.arange(w * h * 3, dtype=np.int64) + d + 7 * f) % 256)
-                    .astype(np.uint8)
-                    .reshape(h, w, 3)
-                    for f in range(n_frames)
-                ]
-                payloads.append(ppm_stream_bytes(frames))
-                metas.append(
-                    {
-                        "width": w,
-                        "height": h,
-                        "format": "ppm-stream",
-                        "duration_ms": n_frames * 250,  # 4 fps
-                        "sample_rate": 0,
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["video"] * len(pdf),
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
     # chain-spread the 1-split doc scan before synthesis (see
     # _spread_chain: 3-kernel pipelines want cores/4 fan-out; only
     # doc_id rows cross the exchange; payload locality unchanged)
-    return _spread_chain(docs.select("doc_id")).mapInPandas(
-        synth,
-        schema=(
-            "media_id bigint, kind string, payload binary,"
-            " meta struct<width:int, height:int, format:string,"
-            " duration_ms:int, sample_rate:int>"
-        ),
-    )
+    return _synthesize(_spread_chain(docs.select("doc_id")), "video", _video_payload)
 
 
 @register(
@@ -374,10 +316,6 @@ def q173_multimodal_video(spark, sf_dir):
     feature scalars shuffle for the rollup.  Frame sampling decodes
     only the frames the 500 ms grid touches — at 100 TB the difference
     between decoding every frame and ~2 per second of footage."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        sample_frame_features,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     media = _video_media(docs)
     frames = sample_frame_features(media, every_ms=500)
@@ -464,41 +402,17 @@ def q247_multimodal_meta_census(spark, sf_dir):
     Arrow kernels in ONE scan stage — payload bytes are born and
     consumed on the same executor, never shuffled, never driver-side;
     only |format| = 3 integer census rows aggregate."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        media_census,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
     def synth(batches):
-        import numpy as np
         import pandas as pd
-
-        from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-            encode_png,
-            wav_sine_bytes,
-        )
 
         for pdf in batches:
             ids, payloads = [], []
             for did in pdf["doc_id"]:
                 d = int(did)
-                # q171's audio law
-                duration_ms = 100 + (d % 32) * 25
-                freq = 220.0 + float(d % 16) * 55.0
-                ids.append(d)
-                payloads.append(wav_sine_bytes(freq, duration_ms, 8_000))
-                # q172's image law
-                w, h = 8 + d % 8, 6 + d % 5
-                px = (
-                    (np.arange(w * h * 3, dtype=np.int64) + d) % 256
-                ).astype(np.uint8)
-                ids.append(d)
-                payloads.append(
-                    encode_png(px.reshape(h, w, 3))
-                    if d % 2
-                    else b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
-                )
+                ids += [d, d]
+                payloads += [_wav_payload(d)[0], _image_payload(d)[0]]
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
     # spread the 1-split doc scan before synthesis (q171's r11 note)
@@ -566,8 +480,8 @@ def q267_image_resize_census(spark, sf_dir):
     Paeth PNG; pixel byte k of doc d is ``(d + k) % 256`` on a
     ``(8 + d%8) x (6 + d%5)`` RGB grid), the REAL codec-free
     nearest-neighbor resize (``operators/multimodal.py::
-    resize_images(fake=False)``) re-encodes every payload to 12x10 in
-    its SAME container (PNG goes parse -> inflate -> un-Paeth ->
+    resize_images``) re-encodes every payload to 12x10 in its SAME
+    container (PNG goes parse -> inflate -> un-Paeth ->
     resample -> re-deflate -> re-CRC), and ``media_census`` recovers
     the ALL-INTEGER census from the RESIZED bytes alone.
 
@@ -592,14 +506,9 @@ def q267_image_resize_census(spark, sf_dir):
     ``_image_media`` — the SAME synth q172 runs, so the rows-only
     float row and this hash gate audit one payload law by
     construction."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        media_census,
-        resize_images,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     media = _image_media(docs).select("media_id", "kind", "payload")
-    resized = resize_images(media, width=12, height=10, fake=False)
+    resized = resize_images(media, width=12, height=10)
     census = media_census(resized)
     return census.groupBy("format").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_media"),
@@ -664,7 +573,7 @@ def q271_video_frame_extract_census(spark, sf_dir):
     pick the frame covering each 500 ms grid instant, SLICE it out as
     a standalone P6 image payload — and ``media_census`` recovers the
     all-integer census from the extracted bytes alone (format from
-    MAGIC BYTES, dims/pixel sums through the real ``_parse_ppm``).
+    MAGIC BYTES, dims/pixel sums through the real ``_parse_image``).
 
     The DuckDB oracle replays the selection law in closed integer
     form: at 4 fps, ``duration = 250*nf`` and the sampled instants
@@ -692,11 +601,6 @@ def q271_video_frame_extract_census(spark, sf_dir):
     vision-pipeline shape: frame extraction is embarrassingly
     parallel over payload bytes, and the downstream image tier
     (resize/decode/census) consumes the slices without re-encoding."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        extract_frames,
-        media_census,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     frames = extract_frames(_video_media(docs), every_ms=500)
     census = media_census(frames.select("media_id", "kind", "payload"))

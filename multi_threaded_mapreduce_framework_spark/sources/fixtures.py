@@ -153,9 +153,7 @@ def layout_tag(spark: SparkSession, sf_dir: str) -> str:
     partitioned dirs under the shared tempdir): sf tag + Spark
     applicationId, so two concurrent sessions over the same sf can
     never overwrite each other's layout mid-query — the tag is safe in
-    both catalog identifiers and filesystem paths. Within one session
-    the tag is stable, so a query re-run reuses (overwrites) its own
-    layout rather than accreting copies."""
+    both catalog identifiers and filesystem paths."""
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
     return f"{sf}_{app}"

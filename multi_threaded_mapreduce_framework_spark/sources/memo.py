@@ -100,28 +100,35 @@ def materialize(spark: SparkSession, key, build):
     return _session_memo(spark).get_or_build(key, build)
 
 
-def session_state(spark: SparkSession, sf_dir: str, name: str, build):
-    """``build(base)``'s value, built at most once per session for the
-    fixture directory ``sf_dir`` as it is now.  ``base`` is a fresh,
-    empty directory under ``mtmrf_layout/<layout_tag>/`` for the build
-    to write into (replays, checkpoints, state); a rebuild after an
-    eviction or a rewritten input never sees an earlier build's files."""
+def fresh_state_dir(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """A new, empty directory ``<name>_<random>`` under
+    ``<tmp>/mtmrf_layout/<layout_tag>/`` for state derived from
+    ``sf_dir``.  Every call gets its own directory, so no writer
+    overwrites files that a relation built earlier still reads."""
     from multi_threaded_mapreduce_framework_spark.sources.fixtures import layout_tag
 
-    def fresh():
-        parent = os.path.join(
-            tempfile.gettempdir(), "mtmrf_layout", layout_tag(spark, sf_dir)
-        )
-        os.makedirs(parent, exist_ok=True)
-        return build(tempfile.mkdtemp(prefix=f"{name}_", dir=parent))
+    parent = os.path.join(
+        tempfile.gettempdir(), "mtmrf_layout", layout_tag(spark, sf_dir)
+    )
+    os.makedirs(parent, exist_ok=True)
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=parent)
 
+
+def session_state(spark: SparkSession, sf_dir: str, name: str, build):
+    """``build(base)``'s value, built at most once per session for the
+    fixture directory ``sf_dir`` as it is now.  ``base`` is a
+    :func:`fresh_state_dir` for the build to write into (replays,
+    checkpoints, state); a rebuild after an eviction or a rewritten
+    input never sees an earlier build's files."""
     key = (
         "session_state",
         name,
         os.path.abspath(sf_dir),
         listing_fingerprint([sf_dir]),
     )
-    return materialize(spark, key, fresh)
+    return materialize(
+        spark, key, lambda: build(fresh_state_dir(spark, sf_dir, name))
+    )
 
 
 def memo_stats(spark: SparkSession) -> dict:

@@ -83,17 +83,9 @@ def test_q144_merge_equals_full_recompute(spark, sf_dir):
     assert sorted(map(tuple, df.collect())) == sorted(map(tuple, full.collect()))
 
 
-def test_q144_state_table_is_group_bounded(spark, sf_dir):
-    import os
-    import tempfile
-
-    from multi_threaded_mapreduce_framework_spark.sources import layout_tag
-
+def test_q144_state_table_is_group_bounded(spark, sf_dir, build_dir):
     QUERIES["q144_incremental_agg_merge"].builder(spark, sf_dir).collect()
-    base = os.path.join(
-        tempfile.gettempdir(), "mtmrf_layout", layout_tag(spark, sf_dir), "agg_state"
-    )
-    state = spark.read.parquet(base)
+    state = spark.read.parquet(build_dir(sf_dir, "agg_state"))
     groups = (
         load_table(spark, sf_dir, "events")
         .select("event_type", F.date_format("ts", "yyyy-MM-dd").alias("day"))
@@ -101,6 +93,17 @@ def test_q144_state_table_is_group_bounded(spark, sf_dir):
         .count()
     )
     assert state.count() <= groups  # state size bounded by the group domain
+
+
+def test_q144_earlier_build_survives_a_rebuild(spark, sf_dir):
+    """Each q144 build writes its partials to its own directory, so a
+    second build leaves the first build's relation readable."""
+    q = QUERIES["q144_incremental_agg_merge"]
+    first = q.builder(spark, sf_dir)
+    second = q.builder(spark, sf_dir)
+    assert sorted(map(tuple, first.collect())) == sorted(
+        map(tuple, second.collect())
+    )
 
 
 def test_q145_twap_crafted_values(spark):

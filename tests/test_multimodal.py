@@ -1,23 +1,115 @@
-"""Multimodal plumbing tests: schemas, batch shapes, determinism, and
-the stub gate (real codec absent -> NotImplementedError)."""
+"""Multimodal kernel tests on real bytes: schemas, batch shapes,
+determinism, exact decode values, and the unknown-container error."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame, SparkSession
 
 from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-    FEATURE_DIM,
+    MEDIA_SCHEMA,
     decode_images,
-    extract_features,
+    encode_png,
+    ppm_stream_bytes,
     resize_images,
-    sample_frames,
-    synthesize_media,
+    sample_frame_features,
+    wav_sine_bytes,
 )
+
+
+def synthesize_mixed_media(spark: SparkSession, n: int = 24, parts: int = 4) -> DataFrame:
+    """Media table of GENUINE payloads, kind ``("image", "audio",
+    "video")[i % 3]`` for row i: a (4 + i%5) x (3 + i%3) RGB ramp as P6
+    PPM or PNG (alternating), a WAV sine, or a 4 fps concatenated-P6
+    stream of 2 + i%4 frames.  ``meta`` declares what the bytes hold."""
+    import numpy as np
+
+    rows = []
+    for i in range(n):
+        kind = ("image", "audio", "video")[i % 3]
+        w, h = 4 + i % 5, 3 + i % 3
+        ramp = ((np.arange(w * h * 3) + i) % 256).astype(np.uint8).reshape(h, w, 3)
+        if kind == "image" and (i // 3) % 2:
+            rows.append((i, kind, bytearray(encode_png(ramp)), (w, h, "png", 0, 0)))
+        elif kind == "image":
+            payload = b"P6\n%d %d\n255\n" % (w, h) + ramp.tobytes()
+            rows.append((i, kind, bytearray(payload), (w, h, "ppm", 0, 0)))
+        elif kind == "audio":
+            dur = 100 + 10 * i
+            payload = wav_sine_bytes(220.0 + 55.0 * i, dur, 8_000)
+            rows.append((i, kind, bytearray(payload), (0, 0, "wav", dur, 8_000)))
+        else:
+            n_frames = 2 + i % 4
+            payload = ppm_stream_bytes([(ramp + 7 * f) % 256 for f in range(n_frames)])
+            meta = (w, h, "ppm-stream", 250 * n_frames, 0)
+            rows.append((i, kind, bytearray(payload), meta))
+    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(parts)
+
+
+def synthesize_ppm_media(spark: SparkSession, n: int = 12, parts: int = 4) -> DataFrame:
+    """Media table whose payloads are GENUINE P6 PPM images: row i is a
+    (8+i) x (6+i) RGB ramp where pixel byte k has value (i + k) % 256.
+    Real decodable bytes — :func:`decode_images` must recover the dims
+    and the exact ramp mean from the payload."""
+    rows = []
+    for i in range(n):
+        w, h = 8 + i, 6 + i
+        header = f"P6\n# ramp {i}\n{w} {h}\n255\n".encode()
+        body = bytes((i + k) % 256 for k in range(w * h * 3))
+        rows.append((i, "image", bytearray(header + body), (w, h, "ppm", 0, 0)))
+    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(parts)
+
+
+def synthesize_png_media(spark: SparkSession, n: int = 10, parts: int = 4) -> DataFrame:
+    """Media table whose payloads are GENUINE PNG images (zlib IDAT,
+    CRC'd chunks): row i is a (8+i) x (6+i) RGB ramp where pixel byte k
+    has value (i + k) % 256 — the SAME pixel law as
+    :func:`synthesize_ppm_media`, so the two real decode paths must
+    agree bit-for-bit on dims and mean. Row i uses scanline filter
+    i % 5, so a full table exercises every PNG unfilter branch."""
+    import numpy as np
+
+    rows = []
+    for i in range(n):
+        w, h = 8 + i, 6 + i
+        px = np.array(
+            [(i + k) % 256 for k in range(w * h * 3)], dtype=np.uint8
+        ).reshape(h, w, 3)
+        payload = encode_png(px, filters=[(i + y) % 5 for y in range(h)])
+        rows.append((i, "image", bytearray(payload), (w, h, "png", 0, 0)))
+    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(parts)
+
+
+def synthesize_wav_media(
+    spark: SparkSession,
+    n: int = 16,
+    sample_rate: int = 8_000,
+    parts: int = 4,
+) -> DataFrame:
+    """Media table whose payloads are GENUINE WAV files (RIFF header +
+    16-bit PCM mono written by stdlib ``wave``): row i is a
+    (220 + 55*i) Hz sine of (200 + 50*i) ms at amplitude 0.5. Real
+    bytes end to end — :func:`decode_audio` must recover the declared
+    duration/rate and the sine's RMS (0.5/sqrt(2)) from the payload
+    alone."""
+    rows = []
+    for i in range(n):
+        duration_ms = 200 + 50 * i
+        freq = 220.0 + 55.0 * i
+        rows.append(
+            (
+                i,
+                "audio",
+                bytearray(wav_sine_bytes(freq, duration_ms, sample_rate)),
+                (0, 0, "wav", duration_ms, sample_rate),
+            )
+        )
+    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(parts)
 
 
 @pytest.fixture(scope="module")
 def media(spark):
-    return synthesize_media(spark, n=24, parts=4).cache()
+    return synthesize_mixed_media(spark, n=24, parts=4).cache()
 
 
 def test_media_schema(media):
@@ -46,15 +138,6 @@ def test_decode_images_deterministic(media):
     }
 
 
-def test_extract_features_shape(media):
-    out = extract_features(media)
-    assert dict(out.dtypes)["feature"] == "array<float>"
-    rows = out.collect()
-    assert len(rows) == 24
-    assert all(len(r.feature) == FEATURE_DIM for r in rows)
-    assert all(0.0 <= x < 1.0 for r in rows for x in r.feature)
-
-
 def test_resize_repacks_header(spark, media):
     out = resize_images(media, 8, 8)
     decoded = decode_images(
@@ -64,7 +147,7 @@ def test_resize_repacks_header(spark, media):
 
 
 def test_sample_frames_flatmap_shape(media):
-    out = sample_frames(media, every_ms=250)
+    out = sample_frame_features(media, every_ms=250)
     n_videos = media.filter("kind='video'").count()
     rows = out.collect()
     assert len(rows) > n_videos  # flatMap: more rows out than in
@@ -80,29 +163,26 @@ def test_sample_frames_flatmap_shape(media):
         assert sorted(f.frame_idx for f in frames) == list(range(len(frames)))
 
 
-def test_real_codec_gate_raises(media):
-    # decode_images gates lazily inside the kernel (executors need the
-    # codec, not the driver): non-PPM payloads without PIL fail at
-    # execution, wrapped in Spark's PythonException
+def test_unknown_container_raises(spark):
+    """A payload that is neither P6 PPM nor PNG fails the image kernels
+    with ValueError (wrapped in Spark's PythonException), never a
+    silent misdecode."""
     from pyspark.errors.exceptions.captured import PythonException
 
-    with pytest.raises(PythonException, match="PIL"):
-        decode_images(media, fake=False).collect()
-    with pytest.raises(NotImplementedError, match="torch"):
-        extract_features(media, fake=False)
-    with pytest.raises(NotImplementedError, match="av"):
-        sample_frames(media, fake=False)
+    df = spark.createDataFrame(
+        [(1, "image", bytearray(b"GIF89a not supported"), (1, 1, "gif", 0, 0))],
+        MEDIA_SCHEMA,
+    )
+    for out in (decode_images(df), resize_images(df, 2, 2)):
+        with pytest.raises(PythonException, match="ValueError: unknown media container"):
+            out.collect()
 
 
 def test_decode_images_real_ppm(spark):
     """REAL image decode: genuine P6 PPM payloads parsed from bytes —
     dims and exact ramp mean recovered with no codec library."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        synthesize_ppm_media,
-    )
-
     ppm = synthesize_ppm_media(spark, n=12, parts=4)
-    rows = {r.media_id: r for r in decode_images(ppm, fake=False).collect()}
+    rows = {r.media_id: r for r in decode_images(ppm).collect()}
     assert len(rows) == 12
     for i, r in rows.items():
         w, h = 8 + i, 6 + i
@@ -115,12 +195,8 @@ def test_decode_images_real_png(spark):
     """REAL image decode #2: genuine PNG payloads (zlib IDAT, CRC'd
     chunks, every scanline filter type across the table) parsed by the
     stdlib decoder — dims and exact ramp mean recovered from bytes."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        synthesize_png_media,
-    )
-
     png = synthesize_png_media(spark, n=10, parts=4)
-    rows = {r.media_id: r for r in decode_images(png, fake=False).collect()}
+    rows = {r.media_id: r for r in decode_images(png).collect()}
     assert len(rows) == 10
     for i, r in rows.items():
         w, h = 8 + i, 6 + i
@@ -137,9 +213,8 @@ def test_png_ppm_decode_parity():
     import numpy as np
 
     from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        _decode_png,
+        _parse_image,
         _parse_png,
-        encode_png,
     )
 
     rng = np.random.default_rng(7)
@@ -150,13 +225,11 @@ def test_png_ppm_decode_parity():
         assert (w, h) == (9, 13)
         assert np.array_equal(got, px), f"filter {ftype} round-trip"
     header = f"P6\n{9} {13}\n255\n".encode()
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        _decode_ppm,
-    )
-
-    ppm_mean = _decode_ppm(header + px.tobytes())
-    png_mean = _decode_png(encode_png(px, filters=[(y * 2) % 5 for y in range(13)]))
-    assert ppm_mean == png_mean
+    ppm = _parse_image(header + px.tobytes())
+    png = _parse_image(encode_png(px, filters=[(y * 2) % 5 for y in range(13)]))
+    assert (ppm[0], png[0]) == ("ppm", "png")
+    assert ppm[1:3] == png[1:3] == (9, 13)
+    assert float(ppm[3].mean()) == float(png[3].mean())
 
 
 def test_png_unsupported_profiles_fail_loudly():
@@ -196,11 +269,10 @@ def test_resize_png_real_path(spark):
     (nearest neighbor), so the mean stays inside the source range."""
     from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
         _parse_png,
-        synthesize_png_media,
     )
 
     media = synthesize_png_media(spark, n=6, parts=2)
-    out = resize_images(media, width=5, height=4, fake=False)
+    out = resize_images(media, width=5, height=4)
     resized = {r.media_id: bytes(r.payload) for r in out.collect()}
     assert len(resized) == 6
     src = {r.media_id: bytes(r.payload) for r in media.collect()}
@@ -217,32 +289,16 @@ def test_decode_audio_real_wav(spark):
     amplitude/sqrt(2) to 3 decimal places."""
     from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
         decode_audio,
-        synthesize_wav_media,
     )
 
     wav = synthesize_wav_media(spark, n=8, sample_rate=8_000, parts=4)
-    rows = {r.media_id: r for r in decode_audio(wav, fake=False).collect()}
+    rows = {r.media_id: r for r in decode_audio(wav).collect()}
     assert len(rows) == 8
     for i, r in rows.items():
         assert r.sample_rate == 8_000
         assert r.duration_ms == 200 + 50 * i
         assert abs(r.rms - (16383 / 32768) / 2**0.5) < 2e-3, (i, r.rms)
         assert 0.4 < r.peak <= 0.5
-
-
-def test_decode_audio_fake_real_schema_parity(spark):
-    """Fake and real audio kernels produce the identical output schema
-    (the plumbing contract the fake path exists to pin)."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        decode_audio,
-        synthesize_wav_media,
-    )
-
-    wav = synthesize_wav_media(spark, n=2, parts=1)
-    real = decode_audio(wav, fake=False)
-    fake = decode_audio(wav, fake=True)
-    assert real.schema == fake.schema
-    assert fake.count() == real.count() == 2
 
 
 def test_metadata_query_never_reads_payload(spark, media, tmp_path):
@@ -266,19 +322,13 @@ def test_resize_ppm_real_path(spark):
     """REAL codec-free resize: genuine P6 bytes in, genuine (smaller)
     P6 bytes out, decodable by the real decode path with the target
     dimensions; a constant-color image keeps its mean exactly."""
-    from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
-        decode_images,
-        resize_images,
-        synthesize_ppm_media,
-    )
-
     media = synthesize_ppm_media(spark, n=6, parts=2)
-    resized = resize_images(media, width=5, height=4, fake=False)
+    resized = resize_images(media, width=5, height=4)
     # re-wrap as a media frame for the decoder (kind + payload)
     import pyspark.sql.functions as F
 
     frame = resized.select("media_id", F.lit("image").alias("kind"), "payload")
-    rows = {r.media_id: r for r in decode_images(frame, fake=False).collect()}
+    rows = {r.media_id: r for r in decode_images(frame).collect()}
     assert rows, "no decoded rows"
     for r in rows.values():
         assert (r.width, r.height) == (5, 4)
@@ -404,7 +454,7 @@ def test_ppm_stream_roundtrip_and_sampling(spark):
 def test_binaryfile_source_to_decode(spark, tmp_path):
     """The documented media-lake ingestion path end to end on REAL
     bytes: PNG files on disk -> spark.read.format('binaryFile') ->
-    schema-mapped media table -> decode_images(fake=False)."""
+    schema-mapped media table -> decode_images."""
     import numpy as np
     import pyspark.sql.functions as F
 
@@ -426,7 +476,7 @@ def test_binaryfile_source_to_decode(spark, tmp_path):
         F.lit("image").alias("kind"),
         F.col("content").alias("payload"),
     )
-    rows = {r.media_id: r for r in decode_images(media, fake=False).collect()}
+    rows = {r.media_id: r for r in decode_images(media).collect()}
     assert len(rows) == 5
     for i, r in rows.items():
         w, h = 6 + i, 4 + i

@@ -1,11 +1,27 @@
 """Null rows next to normal rows: the Arrow text kernels treat a null
-text as a document with no tokens, and the A/B equality gate sorts rows
-that contain NULLs."""
+text as a document with no tokens, the media kernels drop a row whose
+payload is null, and the A/B equality gate sorts rows that contain
+NULLs."""
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
+
 from multi_threaded_mapreduce_framework_spark.functions.heavy_hitters import (
     bigram_mg_candidates,
+)
+from multi_threaded_mapreduce_framework_spark.operators.multimodal import (
+    MEDIA_SCHEMA,
+    decode_audio,
+    decode_images,
+    encode_png,
+    extract_frames,
+    media_census,
+    ppm_stream_bytes,
+    resize_images,
+    sample_frame_features,
+    wav_sine_bytes,
 )
 from multi_threaded_mapreduce_framework_spark.functions.texthash import (
     word_shingle_hashes_np,
@@ -57,3 +73,51 @@ def test_rows_key_sorts_nullable_columns(spark):
     cols, rows = rows_key(df.select("v", "k"))
     assert cols == ["v", "k"]
     assert rows == [(-2.0, 0), (1.5, 2), (None, 1), (None, 3)]
+
+
+def _media_with_nulls(spark):
+    """A PPM, a PNG, a WAV and a P6-stream row, and the same rows with
+    a null-payload row of each kind after each."""
+    px = (np.arange(5 * 4 * 3) % 256).astype(np.uint8).reshape(4, 5, 3)
+    ppm = b"P6\n5 4\n255\n" + px.tobytes()
+    stream = ppm_stream_bytes([px, 255 - px, px])
+    rows = [
+        (1, "image", bytearray(ppm), (5, 4, "ppm", 0, 0)),
+        (2, "image", bytearray(encode_png(px)), (5, 4, "png", 0, 0)),
+        (3, "audio", bytearray(wav_sine_bytes(440.0, 120)), (0, 0, "wav", 120, 8_000)),
+        (4, "video", bytearray(stream), (5, 4, "ppm-stream", 750, 0)),
+    ]
+    mixed = [r for row in rows for r in (row, (100 + row[0], row[1], None, row[3]))]
+    return tuple(
+        spark.createDataFrame(rs, MEDIA_SCHEMA).coalesce(1) for rs in (rows, mixed)
+    )
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        decode_images,
+        decode_audio,
+        lambda df: resize_images(df, 3, 2),
+        media_census,
+        extract_frames,
+        sample_frame_features,
+    ],
+    ids=[
+        "decode_images",
+        "decode_audio",
+        "resize_images",
+        "media_census",
+        "extract_frames",
+        "sample_frame_features",
+    ],
+)
+def test_media_kernels_drop_null_payloads(spark, kernel):
+    clean, mixed = _media_with_nulls(spark)
+
+    def rows(df):
+        return sorted(map(tuple, kernel(df).collect()))
+
+    expected = rows(clean)
+    assert expected
+    assert rows(mixed) == expected

@@ -194,3 +194,17 @@ def test_cache_dict_guard_sees_each_spelling():
         "D_MEMO",
         "E_CACHE",
     ]
+
+
+def test_only_the_memo_spells_the_state_root():
+    """State directories under ``mtmrf_layout`` come from
+    ``sources/memo.py::fresh_state_dir`` alone: a module that builds
+    such a path itself can hand two builds one directory."""
+    root = Path(pkg.__file__).parent
+    memo = root / "sources" / "memo.py"
+    offenders = [
+        str(path.relative_to(root))
+        for path in sorted(root.rglob("*.py"))
+        if path != memo and "mtmrf_layout" in path.read_text()
+    ]
+    assert offenders == []

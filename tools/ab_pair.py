@@ -16,11 +16,10 @@ import importlib.util
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import release_query_state
+from bench import release_query_state, timed_run
 from multi_threaded_mapreduce_framework_spark.session import get_spark
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -36,11 +35,7 @@ def load_build(path: str):
 
 
 def run_once(spark, build, sf_dir: str) -> float:
-    t0 = time.time()
-    df = build(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    del df
+    dt = sum(timed_run(spark, build, sf_dir))
     release_query_state(spark)
     return dt
 

@@ -16,11 +16,10 @@ import os
 import re
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import release_query_state
+from bench import release_query_state, timed_run
 from multi_threaded_mapreduce_framework_spark.queries import all_queries
 from multi_threaded_mapreduce_framework_spark.session import get_spark
 
@@ -61,14 +60,10 @@ def main() -> None:
                 f.write(plan)
         b_times, a_times, t_times = [], [], []
         for _ in range(args.runs):
-            t0 = time.time()
-            df = q.builder(spark, args.sf_dir)
-            t1 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.time()
-            b_times.append(t1 - t0)
-            a_times.append(t2 - t1)
-            t_times.append(t2 - t0)
+            builder_s, action_s = timed_run(spark, q.builder, args.sf_dir)
+            b_times.append(builder_s)
+            a_times.append(action_s)
+            t_times.append(builder_s + action_s)
         del df
         release_query_state(spark)
         print(
