@@ -17,8 +17,10 @@ A first untimed warm-up run per query absorbs JVM/codegen warm-up,
 matching BASELINE.md's "warm runs" protocol.
 
 Every run writes its full payload, with the session memo's hit and miss
-counts, to ``BENCH_LAST.json`` and to ``BENCH_LAST_c{cpus}.json`` beside
-it, so a run at one core count keeps the map of another.
+counts and the driver JVM's class-data archive (``cds``: key, archive
+path, whether the JVM mapped it), to ``BENCH_LAST.json`` and to
+``BENCH_LAST_c{cpus}.json`` beside it, so a run at one core count keeps
+the map of another.
 
 Usage: python bench.py [--runs N] [--sf-dir DIR] [query ...]
 """
@@ -37,7 +39,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from multi_threaded_mapreduce_framework_spark.queries import all_queries
-from multi_threaded_mapreduce_framework_spark.session import get_spark
+from multi_threaded_mapreduce_framework_spark.session import class_data_report, get_spark
 from multi_threaded_mapreduce_framework_spark.sources.memo import memo_stats
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -386,7 +388,7 @@ def main() -> None:
     # 2: the stdout line must not be the only carrier of per-query
     # data).  A filtered run is flagged so nobody mistakes its partial
     # map for a suite record.
-    last = dict(payload, memo=memo_stats(spark))
+    last = dict(payload, memo=memo_stats(spark), cds=class_data_report(spark))
     if args.names:
         last["names_filter"] = sorted(args.names)
     write_last_run(here, last, spark.sparkContext.defaultParallelism)

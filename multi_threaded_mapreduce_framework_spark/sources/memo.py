@@ -24,12 +24,15 @@ The memo lives as long as the Spark application: a new
 depend on files carry :func:`listing_fingerprint`, so rewriting an
 input invalidates them.  :func:`session_state` is the keyed entry for
 state built from a fixture directory: every build gets a fresh
-directory, so no build reads files an earlier build left behind.
+directory, so no build reads files an earlier build left behind, and
+the process removes its state directories when it exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import stat
 import tempfile
 import threading
@@ -51,6 +54,7 @@ class SessionMemo:
         self.misses = 0
         self._entries: OrderedDict = OrderedDict()
         self._lock = threading.Lock()
+        self._removed_at_exit: set[str] = set()
 
     def get_or_build(self, key, build):
         with self._lock:
@@ -68,6 +72,16 @@ class SessionMemo:
             while len(self._entries) > self.capacity:
                 self._entries.popitem(last=False)
         return value
+
+    def remove_at_exit(self, path: str) -> None:
+        """Remove the directory ``path`` when the process exits; the
+        application, and with it every reader of its state, ends with
+        the process."""
+        with self._lock:
+            if path in self._removed_at_exit:
+                return
+            self._removed_at_exit.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
 
     def stats(self) -> dict:
         with self._lock:
@@ -100,17 +114,23 @@ def materialize(spark: SparkSession, key, build):
     return _session_memo(spark).get_or_build(key, build)
 
 
-def fresh_state_dir(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """A new, empty directory ``<name>_<random>`` under
-    ``<tmp>/mtmrf_layout/<layout_tag>/`` for state derived from
-    ``sf_dir``.  Every call gets its own directory, so no writer
-    overwrites files that a relation built earlier still reads."""
+def state_root(spark: SparkSession, sf_dir: str) -> str:
+    """``<tmp>/mtmrf_layout/<layout_tag>/``: the directory holding every
+    state directory the session builds from ``sf_dir``."""
     from multi_threaded_mapreduce_framework_spark.sources.fixtures import layout_tag
 
-    parent = os.path.join(
-        tempfile.gettempdir(), "mtmrf_layout", layout_tag(spark, sf_dir)
-    )
+    return os.path.join(tempfile.gettempdir(), "mtmrf_layout", layout_tag(spark, sf_dir))
+
+
+def fresh_state_dir(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """A new, empty directory ``<name>_<random>`` under
+    :func:`state_root` for state derived from ``sf_dir``.  Every call
+    gets its own directory, so no writer overwrites files that a
+    relation built earlier still reads.  The root is removed when the
+    process exits."""
+    parent = state_root(spark, sf_dir)
     os.makedirs(parent, exist_ok=True)
+    _session_memo(spark).remove_at_exit(parent)
     return tempfile.mkdtemp(prefix=f"{name}_", dir=parent)
 
 

@@ -5,7 +5,6 @@ from __future__ import annotations
 import glob
 import os
 import sys
-import tempfile
 
 import pytest
 
@@ -40,13 +39,10 @@ def build_dir(spark):
     """``build_dir(sf_dir, name)``: the newest directory a
     ``session_state`` build named ``name`` wrote for ``sf_dir`` in
     this session."""
-    from multi_threaded_mapreduce_framework_spark.sources import layout_tag
+    from multi_threaded_mapreduce_framework_spark.sources.memo import state_root
 
     def newest(sf_dir, name):
-        parent = os.path.join(
-            tempfile.gettempdir(), "mtmrf_layout", layout_tag(spark, sf_dir)
-        )
-        pattern = os.path.join(parent, f"{name}_*")
+        pattern = os.path.join(state_root(spark, sf_dir), f"{name}_*")
         dirs = glob.glob(pattern)
         assert dirs, f"no build under {pattern}"
         return max(dirs, key=os.path.getmtime)

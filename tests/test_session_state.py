@@ -198,8 +198,9 @@ def test_cache_dict_guard_sees_each_spelling():
 
 def test_only_the_memo_spells_the_state_root():
     """State directories under ``mtmrf_layout`` come from
-    ``sources/memo.py::fresh_state_dir`` alone: a module that builds
-    such a path itself can hand two builds one directory."""
+    ``sources/memo.py`` alone (``state_root``, ``fresh_state_dir``): a
+    module that builds such a path itself can hand two builds one
+    directory, or leave one behind when its process exits."""
     root = Path(pkg.__file__).parent
     memo = root / "sources" / "memo.py"
     offenders = [
